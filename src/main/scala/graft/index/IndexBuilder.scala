@@ -193,9 +193,11 @@ object IndexBuilder {
     val maxDocId = scalars.getLong(0)
     val totalTokens = scalars.getLong(1)
     val avgdl = totalTokens.toDouble / nDocs.toDouble
-    // bucket ids must fit an Int: bucket = docId div bucketSize is
-    // computed as a saturating SQL cast here but a WRAPPING .toInt in
-    // the searcher — past Int.Max the two silently disagree. 2³¹
+    // bucket ids must fit an Int: bucket = cast(docId div bucketSize as
+    // int) here, a BIGINT→INT cast that raises CAST_OVERFLOW under
+    // Spark's default ANSI mode and wraps with ANSI off (it never
+    // saturates), while the searcher's .toInt wraps — this require is
+    // the real guard, failing before any stage can hit either. 2³¹
     // buckets × the default 2²⁰ width covers 2⁵¹ ≈ 2.3·10¹⁵ docs; the
     // realistic trip is a SMALL fixedBucketSize on a generation at a
     // large id offset (late in a 10¹²-doc streamed ingest) — pin a
@@ -340,20 +342,30 @@ object IndexBuilder {
     * pool's ExecutionException wrapper — concurrent callers keep the
     * exact error contract of the sequential map they replaced (e.g. a
     * missing-positions-sidecar require must still surface as
-    * IllegalArgumentException with its remediation message).
+    * IllegalArgumentException with its remediation message). Every thunk
+    * is awaited before anything is rethrown: the first failure in input
+    * order keeps its stack trace and later failures ride along as
+    * suppressed (the [[buildFromTf]] overlap's rule).
     */
-  private[graft] def awaitAll[T](fs: Seq[() => T]): Seq[T] =
-    fs.map { f =>
+  private[graft] def awaitAll[T](fs: Seq[() => T]): Seq[T] = {
+    val futures = fs.map { f =>
       stagePool.submit(new java.util.concurrent.Callable[T] {
         override def call(): T = f()
       })
-    }.map { fu =>
+    }
+    var primary: Throwable = null
+    val out = futures.map { fu =>
       try fu.get()
       catch {
         case e: java.util.concurrent.ExecutionException if e.getCause != null =>
-          throw e.getCause
+          if (primary == null) primary = e.getCause
+          else if (e.getCause ne primary) primary.addSuppressed(e.getCause)
+          null.asInstanceOf[T]
       }
     }
+    if (primary != null) throw primary
+    out
+  }
 
   /** Shared pool for the overlapped build stage (daemon threads — a
     * crashed driver must not hang on pool shutdown). Concurrent builds

@@ -1,12 +1,13 @@
 package graft.index
 
 import scala.collection.mutable
+import scala.reflect.ClassTag
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.analyze.Tokenizer
-import graft.codec.PostingCodec
+import graft.codec.{PosPostings, PositionCodec, PostingCodec, Postings}
 import graft.query.Bm25
 
 /** Distributed top-k BM25 search over the bucketed inverted index.
@@ -31,9 +32,9 @@ import graft.query.Bm25
   * (/root/reference/include/usearch/index.hpp:1436-1437).
   */
 final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = false,
-    hotPostingsBudgetBytes: Long = Searcher.DefaultHotPostingsBudgetBytes)
-  extends Serializable {
+    hotPostingsBudgetBytes: Long = Searcher.DefaultHotPostingsBudgetBytes) {
   import spark.implicits._
+  import Searcher.{BucketView, PosRows, PostingRows, RowCodec}
 
   private val layout = IndexBuilder.Layout(root)
   val stats: IndexStats = Meta.readStats(root)
@@ -73,6 +74,50 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
   private lazy val segmentsDS = spark.read.parquet(layout.segments).as[PostingRow]
   private lazy val positionsDS = spark.read.parquet(layout.positions).as[PosRow]
 
+  /** The positions sidecar, checked on every access: a Searcher opened
+    * before [[IndexBuilder.buildPositions]] commits picks it up afterwards.
+    */
+  private def positions: Dataset[PosRow] = {
+    require(hasPositions,
+      s"index at $root has no positions sidecar — run IndexBuilder.buildPositions first")
+    positionsDS
+  }
+
+  /** The one per-bucket scan every bucket operator runs: a pruned
+    * `term IN terms AND bucket IN buckets` read of `table` grouped by
+    * bucket — cogrouped with the same buckets' doclens rows when `norms`
+    * (never otherwise: that would add an exchange) — and one
+    * [[Searcher.BucketView]] per bucket holding rows, handed to `kernel`.
+    * The invariant checks run here and in the view. The task closures
+    * capture only locals, so no task serializes this Searcher.
+    */
+  private def scanBuckets[R: ClassTag, P <: AnyRef, O: Encoder](
+      table: Dataset[R],
+      codec: RowCodec[R, P],
+      terms: Seq[String],
+      buckets: Seq[Int],
+      norms: Boolean)(
+      kernel: BucketView[R, P] => Iterator[O]): Dataset[O] = {
+    val source = root
+    val byBucket = table
+      .where($"term".isin(terms: _*) && $"bucket".isin(buckets: _*))
+      .groupByKey(r => codec.bucket(r))
+    if (norms)
+      byBucket.cogroup(doclensDS.where($"bucket".isin(buckets: _*)).groupByKey(_.bucket)) {
+        (bucket, rows, lens) =>
+          val rs = rows.toArray
+          if (rs.isEmpty) Iterator.empty
+          else kernel(new BucketView(bucket, rs, codec,
+            Searcher.normsOf(bucket, lens.nextOption(), source), source,
+            new java.util.HashMap[String, P]()))
+      }
+    else
+      byBucket.flatMapGroups { (bucket, rows) =>
+        kernel(new BucketView(bucket, rows.toArray, codec, null, source,
+          new java.util.HashMap[String, P]()))
+      }
+  }
+
   // ---- hot serving path (driver-side, cacheHot only) -------------------
   // The usearch in-RAM serving analog taken to its conclusion: once the
   // dictionary, norms, and the query terms' postings are resident, a
@@ -83,8 +128,10 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
   // knob; default 256 MB), and the charge per term covers BOTH the
   // encoded blocks and the worst-case decoded expansion (hotDecoded holds
   // docId:8 + tf:4 per posting), so driver residency never exceeds the
-  // budget by the decode factor. searchHot is synchronized: concurrent
-  // serving queries share one access-ordered LRU + one byte account.
+  // budget by the decode factor. hotDecoded holds one decode cache per
+  // bucket, handed to that bucket's view as is. searchHot is
+  // synchronized: concurrent serving queries share one access-ordered
+  // LRU + one byte account.
   private lazy val hotDoclens: Map[Int, DocLenRow] = {
     require(cacheHot, "searchHot requires a Searcher built with cacheHot = true")
     doclensDS.collect().map(d => d.bucket -> d).toMap
@@ -92,7 +139,7 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
   private var hotPostingsBytes: Long = 0L
   private val hotPostings =
     new java.util.LinkedHashMap[String, Array[PostingRow]](64, 0.75f, true)
-  private val hotDecoded = new java.util.HashMap[(String, Int), graft.codec.Postings]()
+  private val hotDecoded = new java.util.HashMap[Int, java.util.HashMap[String, Postings]]()
 
   /** Budget charge for one term's resident rows: encoded block bytes +
     * per-block/row overhead + the decoded arrays hotDecoded will hold
@@ -130,7 +177,10 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
         val e = it.next()
         if (!terms.contains(e.getKey)) {
           hotPostingsBytes -= hotRowCost(e.getValue)
-          e.getValue.foreach(r => hotDecoded.remove((r.term, r.bucket)))
+          e.getValue.foreach { r =>
+            val cache = hotDecoded.get(r.bucket)
+            if (cache != null) cache.remove(r.term)
+          }
           it.remove()
         }
       }
@@ -163,18 +213,12 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     val rowsByTerm = hotRowsFor(live)
     val byBucket = rowsByTerm.valuesIterator.flatten.toArray.groupBy(_.bucket)
     val hits = byBucket.iterator.flatMap { case (bucket, rows) =>
-      val dl = hotDoclens.getOrElse(bucket,
-        throw new IllegalStateException(
-          s"index invariant violated: bucket $bucket has postings but no doclens row ($root)"))
-      // per-bucket pre-decoded cache view (wandBucket keys by term within
-      // one bucket); decoded arrays are retained across queries
-      val cache = new java.util.HashMap[String, graft.codec.Postings]()
-      rows.foreach { r =>
-        cache.put(r.term, hotDecoded.computeIfAbsent((r.term, bucket),
-          _ => graft.codec.PostingCodec.decodeBlocks(r.blocks.map(_.bytes).toSeq)))
-      }
-      Searcher.wandBucket(rows, dl, idfByTerm, stats.avgdl, 1.0, k, exact, allow, cache,
-        after = after)
+      // decoded arrays are retained across queries in the bucket's cache
+      val v = new BucketView(bucket, rows, PostingRows,
+        Searcher.normsOf(bucket, hotDoclens.get(bucket), root), root,
+        hotDecoded.computeIfAbsent(bucket, _ => new java.util.HashMap[String, Postings]()))
+      Searcher.wand(v, rows, idfByTerm, stats.avgdl, 1.0, k, exact, allow,
+        predecoded = true, counters = null, after = after)
     }.toArray
     // the TakeOrderedAndProject merge, driver-side: same total order
     hits.sortBy(h => (-h.score, h.docId)).take(k)
@@ -240,11 +284,12 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     * the driver holds one row.
     */
   def integrityReport(checkPositions: Boolean = false): DataFrame = {
+    val posTable = if (checkPositions) Some(positions) else None
     val bs = stats.bucketSize
     // decoded per-(term, bucket) facts
     val perRow = segmentsDS
       .map { r =>
-        val p = PostingCodec.decodeBlocks(r.blocks.map(_.bytes).toSeq)
+        val p = PostingRows.decode(r)
         var sumTf = 0L
         var asc = true
         var inBucket = true
@@ -270,44 +315,42 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
       sum(col("sum_tf")).as("total_tokens"),
       countDistinct(col("term")).as("n_terms"),
       sum(when(!col("ok"), 1L).otherwise(0L)).as("bad_df")).head()
-    val pool = IndexBuilder.stagePool
-    def submit[T](f: => T): java.util.concurrent.Future[T] =
-      pool.submit(new java.util.concurrent.Callable[T] { override def call(): T = f })
-    // dictionary df == sum of bucket dfs, term sets equal
-    val badDictF = submit {
-      val dictAgg = perRow.groupBy(col("term"))
-        .agg(sum(col("n_postings")).as("seg_df"))
-      dictDS.select(col("term"), col("df"))
-        .join(dictAgg, Seq("term"), "full_outer")
-        .where(col("df").isNull || col("seg_df").isNull || col("df") =!= col("seg_df"))
-        .count()
-    }
-    // per-doc decoded tf sums == doclens norms; the doclens row count
-    // falls out of the same full-outer join (the separate dlFlat.count()
-    // job re-read and re-flattened every doclens row)
-    val dlAggF = submit {
-      val docTf = segmentsDS
-        .flatMap { r =>
-          val p = PostingCodec.decodeBlocks(r.blocks.map(_.bytes).toSeq)
-          p.docIds.iterator.zip(p.tfs.iterator).map { case (d, tf) => (d, tf.toLong) }
-        }.toDF("doc_id", "tf")
-        .groupBy(col("doc_id")).agg(sum(col("tf")).as("sum_tf"))
-      val dlFlat = doclensDS
-        .flatMap(r => r.docIds.iterator.zip(r.lens.iterator))
-        .toDF("doc_id", "dl")
-      dlFlat.join(docTf, Seq("doc_id"), "full_outer")
-        .agg(
-          sum(when(coalesce(col("dl"), lit(0L)) =!= coalesce(col("sum_tf"), lit(0L)), 1L)
-            .otherwise(0L)).as("bad"),
-          sum(when(col("dl").isNotNull, 1L).otherwise(0L)).as("n_docs"))
-        .head()
-    }
-    val badPosF = submit {
-      if (!checkPositions) 0L
-      else {
-        val posFlat = positionsDS
+    val Seq(badDict, badDoclen, nDocs, badPos) = IndexBuilder.awaitAll(Seq(
+      // dictionary df == sum of bucket dfs, term sets equal
+      () => {
+        val dictAgg = perRow.groupBy(col("term"))
+          .agg(sum(col("n_postings")).as("seg_df"))
+        Seq(dictDS.select(col("term"), col("df"))
+          .join(dictAgg, Seq("term"), "full_outer")
+          .where(col("df").isNull || col("seg_df").isNull || col("df") =!= col("seg_df"))
+          .count())
+      },
+      // per-doc decoded tf sums == doclens norms; the doclens row count
+      // falls out of the same full-outer join (the separate dlFlat.count()
+      // job re-read and re-flattened every doclens row)
+      () => {
+        val docTf = segmentsDS
           .flatMap { r =>
-            val p = graft.codec.PositionCodec.decodeBlocks(r.blocks.map(_.bytes).toSeq)
+            val p = PostingRows.decode(r)
+            p.docIds.iterator.zip(p.tfs.iterator).map { case (d, tf) => (d, tf.toLong) }
+          }.toDF("doc_id", "tf")
+          .groupBy(col("doc_id")).agg(sum(col("tf")).as("sum_tf"))
+        val dlFlat = doclensDS
+          .flatMap(r => r.docIds.iterator.zip(r.lens.iterator))
+          .toDF("doc_id", "dl")
+        val dlAgg = dlFlat.join(docTf, Seq("doc_id"), "full_outer")
+          .agg(
+            sum(when(coalesce(col("dl"), lit(0L)) =!= coalesce(col("sum_tf"), lit(0L)), 1L)
+              .otherwise(0L)).as("bad"),
+            sum(when(col("dl").isNotNull, 1L).otherwise(0L)).as("n_docs"))
+          .head()
+        Seq(if (dlAgg.isNullAt(0)) 0L else dlAgg.getLong(0),
+          if (dlAgg.isNullAt(1)) 0L else dlAgg.getLong(1))
+      },
+      () => Seq(posTable.fold(0L) { pos =>
+        val posFlat = pos
+          .flatMap { r =>
+            val p = PosRows.decode(r)
             p.docIds.iterator.zip(p.positions.iterator).map { case (d, ps) =>
               val asc = ps.indices.forall(i => i == 0 || ps(i - 1) < ps(i))
               (r.term, d, ps.length.toLong, asc)
@@ -315,20 +358,14 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
           }.toDF("term", "doc_id", "n_pos", "pos_ok")
         val tfFlat = segmentsDS
           .flatMap { r =>
-            val p = PostingCodec.decodeBlocks(r.blocks.map(_.bytes).toSeq)
+            val p = PostingRows.decode(r)
             p.docIds.iterator.zip(p.tfs.iterator).map { case (d, tf) => (r.term, d, tf.toLong) }
           }.toDF("term", "doc_id", "tf")
         posFlat.join(tfFlat, Seq("term", "doc_id"), "full_outer")
           .where(col("n_pos").isNull || col("tf").isNull ||
             col("n_pos") =!= col("tf") || !col("pos_ok"))
           .count()
-      }
-    }
-    val badDict = badDictF.get()
-    val dlAgg = dlAggF.get()
-    val badPos = badPosF.get()
-    val badDoclen = if (dlAgg.isNullAt(0)) 0L else dlAgg.getLong(0)
-    val nDocs = if (dlAgg.isNullAt(1)) 0L else dlAgg.getLong(1)
+      }))).flatten
     val nPostings = scalars.getLong(0)
     val totalTokens = scalars.getLong(1)
     val nTerms = scalars.getLong(2)
@@ -385,7 +422,7 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     segmentsDS
       .where($"term".isin(terms: _*) && $"bucket".isin(buckets: _*))
       .flatMap { row =>
-        val p = PostingCodec.decodeBlocks(row.blocks.map(_.bytes).toSeq)
+        val p = PostingRows.decode(row)
         Iterator.tabulate(p.size)(i => (row.term, p.docIds(i)))
       }
       .toDF("term", "doc_id")
@@ -413,7 +450,7 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
       .where($"bucket".isin(buckets: _*))
       .flatMap { row =>
         val ids = idsB.value
-        val p = PostingCodec.decodeBlocks(row.blocks.map(_.bytes).toSeq)
+        val p = PostingRows.decode(row)
         p.docIds.iterator.zip(p.tfs.iterator)
           .collect { case (d, tf) if ids(d) => (d, row.term, tf.toLong) }
       }
@@ -449,8 +486,7 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     * ordered (phrase_id, doc_id), rows only where phrase_tf > 0.
     */
   def phraseMany(phrases: Seq[(Int, String)]): DataFrame = {
-    require(hasPositions,
-      s"index at $root has no positions sidecar — run IndexBuilder.buildPositions first")
+    val table = positions
     val empty = spark.emptyDataset[(Int, Long, Long)]
       .toDF("phrase_id", "doc_id", "phrase_tf")
     val qs: Seq[(Int, Array[String])] =
@@ -467,26 +503,13 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     val liveTerms = live.flatMap(_._2).distinct
     val qsB = spark.sparkContext.broadcast(live)
     val pbB = spark.sparkContext.broadcast(phraseBuckets)
-    positionsDS
-      .where($"term".isin(liveTerms: _*) && $"bucket".isin(buckets: _*))
-      .groupByKey(_.bucket)
-      .flatMapGroups { (bucket, it) =>
-        val rows = it.toArray
-        // one row per (term, bucket) is the same index invariant the TAAT
-        // paths assert — a violating merge artifact must fail loudly
-        val byTerm = rows.iterator.map(r =>
-          r.term -> graft.codec.PositionCodec.decodeBlocks(r.blocks.map(_.bytes).toSeq)).toMap
-        if (byTerm.size != rows.length)
-          throw new IllegalStateException(
-            s"positions invariant violated in bucket $bucket: ${rows.length} rows, " +
-              s"${byTerm.size} terms")
-        qsB.value.iterator
-          .filter { case (id, _) => pbB.value(id).contains(bucket) }
-          .flatMap { case (id, ts) =>
-            Searcher.phraseHitsInBucket(ts, byTerm).map { case (d, n) => (id, d, n) }
-          }
-      }
-      .toDF("phrase_id", "doc_id", "phrase_tf")
+    scanBuckets(table, PosRows, liveTerms, buckets, norms = false) { v =>
+      qsB.value.iterator
+        .filter { case (id, _) => pbB.value(id).contains(v.bucket) }
+        .flatMap { case (id, ts) =>
+          Searcher.phraseHitsInBucket(ts, v).map { case (d, n) => (id, d, n) }
+        }
+    }.toDF("phrase_id", "doc_id", "phrase_tf")
       .orderBy(col("phrase_id"), col("doc_id"))
   }
 
@@ -512,8 +535,7 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     * min_span ≤ window.
     */
   def proximityMany(queries: Seq[(Int, String, Int)]): DataFrame = {
-    require(hasPositions,
-      s"index at $root has no positions sidecar — run IndexBuilder.buildPositions first")
+    val table = positions
     val empty = spark.emptyDataset[(Int, Long, Long, Long)]
       .toDF("query_id", "doc_id", "min_span", "span_start")
     val qs: Seq[(Int, Array[String], Int)] = queries
@@ -531,25 +553,14 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     val liveTerms = live.flatMap(_._2).distinct
     val qsB = spark.sparkContext.broadcast(live)
     val qbB = spark.sparkContext.broadcast(queryBuckets)
-    positionsDS
-      .where($"term".isin(liveTerms: _*) && $"bucket".isin(buckets: _*))
-      .groupByKey(_.bucket)
-      .flatMapGroups { (bucket, it) =>
-        val rows = it.toArray
-        val byTerm = rows.iterator.map(r =>
-          r.term -> graft.codec.PositionCodec.decodeBlocks(r.blocks.map(_.bytes).toSeq)).toMap
-        if (byTerm.size != rows.length)
-          throw new IllegalStateException(
-            s"positions invariant violated in bucket $bucket: ${rows.length} rows, " +
-              s"${byTerm.size} terms")
-        qsB.value.iterator
-          .filter { case (id, _, _) => qbB.value(id).contains(bucket) }
-          .flatMap { case (id, ts, w) =>
-            Searcher.proximityHitsInBucket(ts, w, byTerm)
-              .map { case (d, span, start) => (id, d, span, start) }
-          }
-      }
-      .toDF("query_id", "doc_id", "min_span", "span_start")
+    scanBuckets(table, PosRows, liveTerms, buckets, norms = false) { v =>
+      qsB.value.iterator
+        .filter { case (id, _, _) => qbB.value(id).contains(v.bucket) }
+        .flatMap { case (id, ts, w) =>
+          Searcher.proximityHitsInBucket(ts, w, v)
+            .map { case (d, span, start) => (id, d, span, start) }
+        }
+    }.toDF("query_id", "doc_id", "min_span", "span_start")
       .orderBy(col("query_id"), col("doc_id"))
   }
 
@@ -581,8 +592,7 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     * min_span ≤ window.
     */
   def spanOrderedMany(queries: Seq[(Int, String, Int)]): DataFrame = {
-    require(hasPositions,
-      s"index at $root has no positions sidecar — run IndexBuilder.buildPositions first")
+    val table = positions
     val empty = spark.emptyDataset[(Int, Long, Long, Long)]
       .toDF("query_id", "doc_id", "min_span", "span_start")
     // tokens IN ORDER — the ordered constraint is the whole point
@@ -601,25 +611,14 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     val liveTerms = live.flatMap(_._2).distinct
     val qsB = spark.sparkContext.broadcast(live)
     val qbB = spark.sparkContext.broadcast(queryBuckets)
-    positionsDS
-      .where($"term".isin(liveTerms: _*) && $"bucket".isin(buckets: _*))
-      .groupByKey(_.bucket)
-      .flatMapGroups { (bucket, it) =>
-        val rows = it.toArray
-        val byTerm = rows.iterator.map(r =>
-          r.term -> graft.codec.PositionCodec.decodeBlocks(r.blocks.map(_.bytes).toSeq)).toMap
-        if (byTerm.size != rows.length)
-          throw new IllegalStateException(
-            s"positions invariant violated in bucket $bucket: ${rows.length} rows, " +
-              s"${byTerm.size} terms")
-        qsB.value.iterator
-          .filter { case (id, _, _) => qbB.value(id).contains(bucket) }
-          .flatMap { case (id, ts, w) =>
-            Searcher.orderedSpanHitsInBucket(ts, w, byTerm)
-              .map { case (d, span, start) => (id, d, span, start) }
-          }
-      }
-      .toDF("query_id", "doc_id", "min_span", "span_start")
+    scanBuckets(table, PosRows, liveTerms, buckets, norms = false) { v =>
+      qsB.value.iterator
+        .filter { case (id, _, _) => qbB.value(id).contains(v.bucket) }
+        .flatMap { case (id, ts, w) =>
+          Searcher.orderedSpanHitsInBucket(ts, w, v)
+            .map { case (d, span, start) => (id, d, span, start) }
+        }
+    }.toDF("query_id", "doc_id", "min_span", "span_start")
       .orderBy(col("query_id"), col("doc_id"))
   }
 
@@ -660,38 +659,26 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     val liveTerms = live.flatMap(_._2).distinct
     val qsB = spark.sparkContext.broadcast(live)
     val qbB = spark.sparkContext.broadcast(queryBuckets)
-    val partials = segmentsDS
-      .where($"term".isin(liveTerms: _*) && $"bucket".isin(buckets: _*))
-      .groupByKey(_.bucket)
-      .flatMapGroups { (bucket, it) =>
-        val rows = it.toArray
-        val decoded = new java.util.HashMap[String, graft.codec.Postings]()
-        rows.foreach(r => decoded.put(r.term,
-          PostingCodec.decodeBlocks(r.blocks.map(_.bytes).toSeq)))
-        if (decoded.size != rows.length)
-          throw new IllegalStateException(
-            s"index invariant violated: bucket $bucket holds more than one " +
-              s"segment row per term (${rows.length} rows, ${decoded.size} terms)")
-        qsB.value.iterator
-          .filter { case (id, _) => qbB.value(id).contains(bucket) }
-          .map { case (id, ts) =>
-            val seen = new java.util.HashSet[Long]()
-            var tfSum = 0L
-            ts.foreach { t =>
-              val p = decoded.get(t)
-              if (p != null) {
-                var i = 0
-                while (i < p.size) {
-                  seen.add(p.docIds(i))
-                  tfSum += p.tfs(i)
-                  i += 1
-                }
+    val partials = scanBuckets(segmentsDS, PostingRows, liveTerms, buckets, norms = false) { v =>
+      qsB.value.iterator
+        .filter { case (id, _) => qbB.value(id).contains(v.bucket) }
+        .map { case (id, ts) =>
+          val seen = new java.util.HashSet[Long]()
+          var tfSum = 0L
+          ts.foreach { t =>
+            val p = v.decoded(t)
+            if (p != null) {
+              var i = 0
+              while (i < p.size) {
+                seen.add(p.docIds(i))
+                tfSum += p.tfs(i)
+                i += 1
               }
             }
-            (id, seen.size.toLong, tfSum)
           }
-      }
-      .toDF("query_id", "n_docs", "total_tf")
+          (id, seen.size.toLong, tfSum)
+        }
+    }.toDF("query_id", "n_docs", "total_tf")
       .groupBy(col("query_id"))
       .agg(sum(col("n_docs")).as("n_docs"), sum(col("total_tf")).as("total_tf"))
     // dead / bucket-empty queries still owe a (0, 0) row
@@ -723,38 +710,21 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     val live = ts.filter(t => local.get(t).exists(_.df > 0L))
     if (live.isEmpty) return empty
     val buckets = live.flatMap(t => local(t).buckets).distinct
-    val kLocal = k
-    val postings = segmentsDS
-      .where($"term".isin(live: _*) && $"bucket".isin(buckets.toSeq: _*))
-    val doclens = doclensDS.where($"bucket".isin(buckets.toSeq: _*))
-    val perBucket = postings
-      .groupByKey(_.bucket)
-      .cogroup(doclens.groupByKey(_.bucket)) { (bucket, posts, lens) =>
-        val postsArr = posts.toArray
-        val lensArr = lens.toArray
-        if (postsArr.isEmpty) Iterator.empty
-        else if (lensArr.isEmpty)
-          throw new IllegalStateException(
-            s"index invariant violated: bucket $bucket has postings but no doclens row ($root)")
-        else {
-          val dl = lensArr.head
-          val seen = new java.util.HashSet[Long]()
-          postsArr.foreach { r =>
-            val p = PostingCodec.decodeBlocks(r.blocks.map(_.bytes).toSeq)
-            var i = 0
-            while (i < p.size) { seen.add(p.docIds(i)); i += 1 }
-          }
-          val topk = new Searcher.TopK(kLocal)
-          val it = seen.iterator()
-          while (it.hasNext) {
-            val d = it.next()
-            val len = dl.lens(java.util.Arrays.binarySearch(dl.docIds, d))
-            topk.offer(d, len.toDouble)
-          }
-          topk.result
-        }
+    val perBucket = scanBuckets(segmentsDS, PostingRows, live.toSeq, buckets.toSeq, norms = true) { v =>
+      val seen = new java.util.HashSet[Long]()
+      v.rows.foreach { r =>
+        val p = v.decoded(r.term)
+        var i = 0
+        while (i < p.size) { seen.add(p.docIds(i)); i += 1 }
       }
-      .toDF("doc_id", "len")
+      val topk = new Searcher.TopK(k)
+      val it = seen.iterator()
+      while (it.hasNext) {
+        val d = it.next()
+        topk.offer(d, v.lenOf(d).toDouble)
+      }
+      topk.result
+    }.toDF("doc_id", "len")
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(desc("len"), asc("doc_id"))
     perBucket
@@ -781,8 +751,7 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     * Returns DataFrame(doc_id: Long, phrase_tf: Long) ordered by doc_id.
     */
   def phrasePrefix(head: String, prefix: String, maxExpansion: Int = 1024): DataFrame = {
-    require(hasPositions,
-      s"index at $root has no positions sidecar — run IndexBuilder.buildPositions first")
+    positions // fail fast, before the dictionary expansion
     val empty = spark.emptyDataset[(Long, Long)].toDF("doc_id", "phrase_tf")
     val headTs = Tokenizer.tokenize(head)
     require(headTs.nonEmpty, s"phrase-prefix head '$head' normalizes to nothing")
@@ -894,8 +863,7 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     * and contributes nothing (inner join).
     */
   def followersMany(seeds: Seq[String], n: Int): DataFrame = {
-    require(hasPositions,
-      s"index at $root has no positions sidecar — run IndexBuilder.buildPositions first")
+    val table = positions
     val empty = spark.emptyDataset[(String, Int, String, Long)]
       .toDF("seed", "rank", "follower", "n_pairs")
     val norm = seeds.flatMap(Tokenizer.tokenize).distinct.sorted
@@ -903,7 +871,7 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     val live = norm.filter(t => local.get(t).exists(_.df > 0L))
     if (live.isEmpty) return empty
     val buckets = live.flatMap(t => local(t).buckets).distinct
-    val seedOcc = positionsDS
+    val seedOcc = table
       .where($"term".isin(live: _*) && $"bucket".isin(buckets: _*))
       .flatMap { r =>
         r.blocks.iterator.flatMap { b =>
@@ -914,7 +882,7 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
         }
       }
       .toDF("seed", "bucket", "doc_id", "pos")
-    val followers = positionsDS
+    val followers = table
       .where($"bucket".isin(buckets: _*))
       .flatMap { r =>
         r.blocks.iterator.flatMap { b =>
@@ -1053,33 +1021,14 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     val buckets = queryBuckets.values.flatten.toSeq.distinct
     if (buckets.isEmpty) return emptyPartial
 
-    val postings = segmentsDS
-      .where($"term".isin(liveTerms: _*) && $"bucket".isin(buckets: _*))
-    val doclens = doclensDS.where($"bucket".isin(buckets: _*))
-
     val idfB = spark.sparkContext.broadcast(idfByTerm)
     val qsB = spark.sparkContext.broadcast(live.toArray)
     val qbB = spark.sparkContext.broadcast(queryBuckets)
-    val kLocal = k
-    val avgdlLocal = g.avgdl
-
-    postings
-      .groupByKey(_.bucket)
-      .cogroup(doclens.groupByKey(_.bucket)) { (bucket, posts, lens) =>
-        val postsArr = posts.toArray
-        val lensArr = lens.toArray
-        if (postsArr.isEmpty) Iterator.empty
-        else if (lensArr.isEmpty)
-          throw new IllegalStateException(
-            s"index invariant violated: bucket $bucket has postings but no doclens row ($root)")
-        else {
-          val active = qsB.value.filter { case (id, _) => qbB.value(id).contains(bucket) }
-          val cache = new java.util.HashMap[String, graft.codec.Postings]()
-          Searcher.conjunctiveBucket(postsArr, lensArr.head, idfB.value,
-            avgdlLocal, kLocal, active, cache)
-        }
-      }
-      .toDF("query_id", "doc_id", "score")
+    val avgdl = g.avgdl
+    scanBuckets(segmentsDS, PostingRows, liveTerms, buckets, norms = true) { v =>
+      val active = qsB.value.filter { case (id, _) => qbB.value(id).contains(v.bucket) }
+      Searcher.conjunctiveBucket(v, idfB.value, avgdl, k, active)
+    }.toDF("query_id", "doc_id", "score")
   }
 
   /** Batched MINIMUM-SHOULD-MATCH top-k (the Lucene/Elasticsearch
@@ -1145,33 +1094,14 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     val buckets = queryBuckets.values.flatten.toSeq.distinct
     if (buckets.isEmpty) return emptyPartial
 
-    val postings = segmentsDS
-      .where($"term".isin(liveTerms: _*) && $"bucket".isin(buckets: _*))
-    val doclens = doclensDS.where($"bucket".isin(buckets: _*))
-
     val idfB = spark.sparkContext.broadcast(idfByTerm)
     val qsB = spark.sparkContext.broadcast(live.toArray)
     val qbB = spark.sparkContext.broadcast(queryBuckets)
-    val kLocal = k
-    val avgdlLocal = g.avgdl
-
-    postings
-      .groupByKey(_.bucket)
-      .cogroup(doclens.groupByKey(_.bucket)) { (bucket, posts, lens) =>
-        val postsArr = posts.toArray
-        val lensArr = lens.toArray
-        if (postsArr.isEmpty) Iterator.empty
-        else if (lensArr.isEmpty)
-          throw new IllegalStateException(
-            s"index invariant violated: bucket $bucket has postings but no doclens row ($root)")
-        else {
-          val active = qsB.value.filter { case (id, _, _) => qbB.value(id).contains(bucket) }
-          val cache = new java.util.HashMap[String, graft.codec.Postings]()
-          Searcher.minMatchBucket(postsArr, lensArr.head, idfB.value,
-            avgdlLocal, kLocal, active, cache)
-        }
-      }
-      .toDF("query_id", "doc_id", "score")
+    val avgdl = g.avgdl
+    scanBuckets(segmentsDS, PostingRows, liveTerms, buckets, norms = true) { v =>
+      val active = qsB.value.filter { case (id, _, _) => qbB.value(id).contains(v.bucket) }
+      Searcher.minMatchBucket(v, idfB.value, avgdl, k, active)
+    }.toDF("query_id", "doc_id", "score")
   }
 
   /** PREFIX-expanded top-k search (the dictionary-driven `term*` wildcard
@@ -1305,8 +1235,7 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     * ordered (query_id, rank); snippet_start is 0-based.
     */
   def snippetMany(queries: Seq[(Int, String)], k: Int): DataFrame = {
-    require(hasPositions,
-      s"index at $root has no positions sidecar — run IndexBuilder.buildPositions first")
+    val table = positions
     // ONE execution of the conjunctive search: the bounded top-k rows
     // come to the driver (k per query) and re-enter the plan as a local
     // broadcast-joinable relation
@@ -1332,27 +1261,16 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
         termsByQuery.map { case (q, ts) =>
           (q, ts, bucketsByQuery(q), docsByQuery(q))
         }.toArray)
-      positionsDS
-        .where($"term".isin(liveTerms: _*) && $"bucket".isin(buckets: _*))
-        .groupByKey(_.bucket)
-        .flatMapGroups { (bucket, it) =>
-          val rows = it.toArray
-          val byTerm = rows.iterator.map(r =>
-            r.term -> graft.codec.PositionCodec.decodeBlocks(r.blocks.map(_.bytes).toSeq)).toMap
-          if (byTerm.size != rows.length)
-            throw new IllegalStateException(
-              s"positions invariant violated in bucket $bucket: ${rows.length} rows, " +
-                s"${byTerm.size} terms")
-          qB.value.iterator
-            .filter { case (_, _, bks, _) => bks.contains(bucket) }
-            .flatMap { case (id, ts, _, ds) =>
-              val only = new java.util.HashSet[Long](ds.size * 2)
-              ds.foreach(only.add)
-              Searcher.proximityHitsInBucket(ts, Int.MaxValue, byTerm, only)
-                .map { case (d, span, start) => (id, d, start, span) }
-            }
-        }
-        .toDF("query_id", "doc_id", "snippet_start", "snippet_len")
+      scanBuckets(table, PosRows, liveTerms, buckets, norms = false) { v =>
+        qB.value.iterator
+          .filter { case (_, _, bks, _) => bks.contains(v.bucket) }
+          .flatMap { case (id, ts, _, ds) =>
+            val only = new java.util.HashSet[Long](ds.size * 2)
+            ds.foreach(only.add)
+            Searcher.proximityHitsInBucket(ts, Int.MaxValue, v, only)
+              .map { case (d, span, start) => (id, d, start, span) }
+          }
+      }.toDF("query_id", "doc_id", "snippet_start", "snippet_len")
     }
     // every conjunctive hit contains all terms, so the inner join is
     // lossless by construction (RetrievalModesSpec pins the count)
@@ -1424,65 +1342,38 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     // negated terms: postings read alongside the positive ones (same
     // pruned scan — term IN over both lists, buckets only where a
     // positive term can produce a hit), decoded into a bucket-LOCAL
-    // exclusion array inside the cogroup. Nothing about the negation
+    // exclusion array inside the scan. Nothing about the negation
     // ever reaches the driver or a broadcast of doc ids: the excluded
     // set is built where the postings already live, bounded by the
     // bucket-width geometry like every other per-bucket structure.
     val negLive = negTerms.filter(t => local.get(t).exists(_.df > 0L))
     val scanTerms = (termList ++ negLive).distinct
 
-    val postings = segmentsDS
-      .where($"term".isin(scanTerms: _*) && $"bucket".isin(touchedBuckets: _*))
-    val doclens = doclensDS
-      .where($"bucket".isin(touchedBuckets: _*))
-
     val idfB = spark.sparkContext.broadcast(idfByTerm)
     val allowB = spark.sparkContext.broadcast(allow)
     val negB = spark.sparkContext.broadcast(negLive.toSet)
-    val kLocal = k
-    val exactLocal = exact
-    val avgdlLocal = g.avgdl
-    val ubScaleLocal = ubScale
-    val countersLocal = counters.orNull
-    val afterLocal = after
+    val avgdl = g.avgdl
+    val countersOrNull = counters.orNull
 
-    val perBucket = postings
-      .groupByKey(_.bucket)
-      .cogroup(doclens.groupByKey(_.bucket)) { (bucket, posts, lens) =>
-        val postsArr = posts.toArray
-        val lensArr = lens.toArray
-        if (postsArr.isEmpty) Iterator.empty
-        else if (lensArr.isEmpty)
-          // postings without a norms row is index corruption (e.g. a
-          // bucketSize mismatch from a bad resume) — fail loudly instead
-          // of silently dropping the bucket's hits
-          throw new IllegalStateException(
-            s"index invariant violated: bucket $bucket has postings but no doclens row ($root)")
+    scanBuckets(segmentsDS, PostingRows, scanTerms, touchedBuckets, norms = true) { v =>
+      val negSet = negB.value
+      val (negRows, posRows) =
+        if (negSet.isEmpty) (Array.empty[PostingRow], v.rows)
+        else v.rows.partition(r => negSet.contains(r.term))
+      val effAllow: Option[Long => Boolean] =
+        if (negRows.isEmpty) allowB.value
         else {
-          val dl = lensArr.head
-          val negSet = negB.value
-          val (negRows, posRows) =
-            if (negSet.isEmpty) (Array.empty[PostingRow], postsArr)
-            else postsArr.partition(r => negSet.contains(r.term))
-          val effAllow: Option[Long => Boolean] =
-            if (negRows.isEmpty) allowB.value
-            else {
-              val excluded = negRows.flatMap(r =>
-                PostingCodec.decodeBlocks(r.blocks.map(_.bytes).toSeq).docIds)
-              java.util.Arrays.sort(excluded)
-              val user = allowB.value
-              Some((id: Long) =>
-                java.util.Arrays.binarySearch(excluded, id) < 0 &&
-                  user.forall(_(id)))
-            }
-          Searcher.wandBucket(
-            posRows, dl, idfB.value, avgdlLocal, ubScaleLocal,
-            kLocal, exactLocal, effAllow, counters = countersLocal,
-            after = afterLocal)
+          val excluded = negRows.flatMap(r => v.decoded(r.term).docIds)
+          java.util.Arrays.sort(excluded)
+          val user = allowB.value
+          Some((id: Long) =>
+            java.util.Arrays.binarySearch(excluded, id) < 0 &&
+              user.forall(_(id)))
         }
-      }
-
-    perBucket
+      // lazy block decoding: skipped blocks are never decoded
+      Searcher.wand(v, posRows, idfB.value, avgdl, ubScale, k, exact, effAllow,
+        predecoded = false, countersOrNull, after)
+    }
       .toDF("doc_id", "score")
       .orderBy(desc("score"), asc("doc_id"))
       .limit(k)
@@ -1519,28 +1410,14 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     val touchedBuckets = termList
       .flatMap(t => local.get(t).map(_.buckets.toSeq).getOrElse(Seq.empty))
       .distinct
-    val postings = segmentsDS
-      .where($"term".isin(termList: _*) && $"bucket".isin(touchedBuckets: _*))
-    val doclens = doclensDS.where($"bucket".isin(touchedBuckets: _*))
     val idfB = spark.sparkContext.broadcast(idfByTerm)
-    val avgdlLocal = stats.avgdl
-    postings
-      .groupByKey(_.bucket)
-      .cogroup(doclens.groupByKey(_.bucket)) { (bucket, posts, lens) =>
-        val postsArr = posts.toArray
-        val lensArr = lens.toArray
-        if (postsArr.isEmpty) Iterator.empty
-        else if (lensArr.isEmpty)
-          throw new IllegalStateException(
-            s"index invariant violated: bucket $bucket has postings but no doclens row ($root)")
-        else
-          // k = MaxValue keeps every scored doc: TopK's heap grows
-          // lazily, so memory is O(matched-in-bucket) ≤ bucket width
-          Searcher.wandBucket(
-            postsArr, lensArr.head, idfB.value, avgdlLocal, ubScale = 1.0,
-            k = Int.MaxValue, exact = true, allow = None)
-      }
-      .toDF("doc_id", "score")
+    val avgdl = stats.avgdl
+    scanBuckets(segmentsDS, PostingRows, termList, touchedBuckets, norms = true) { v =>
+      // k = MaxValue keeps every scored doc: TopK's heap grows
+      // lazily, so memory is O(matched-in-bucket) ≤ bucket width
+      Searcher.wand(v, v.rows, idfB.value, avgdl, ubScale = 1.0, k = Int.MaxValue,
+        exact = true, allow = None, predecoded = false, counters = null, after = None)
+    }.toDF("doc_id", "score")
   }
 
   /** SEARCH-AFTER deep pagination (the Lucene `searchAfter` analog; the
@@ -1671,73 +1548,54 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     val buckets = live.flatten.flatMap(t => local(t).buckets.toSeq).distinct
     if (buckets.isEmpty) return spark.emptyDataset[Hit].toDF("doc_id", "score")
 
-    val scanTerms = live.flatten
-    val postings = segmentsDS
-      .where($"term".isin(scanTerms: _*) && $"bucket".isin(buckets: _*))
-    val doclens = doclensDS.where($"bucket".isin(buckets: _*))
     val groupOfB = spark.sparkContext.broadcast(groupOf)
     val idfsB = spark.sparkContext.broadcast(idfs)
     val wsB = spark.sparkContext.broadcast(ws)
-    val kLocal = k
-    val avgdlLocal = stats.avgdl
+    val avgdl = stats.avgdl
     val isDisMax = disMaxTie.isDefined
-    val tieLocal = disMaxTie.getOrElse(1.0)
+    val tie = disMaxTie.getOrElse(1.0)
 
-    val perBucket = postings
-      .groupByKey(_.bucket)
-      .cogroup(doclens.groupByKey(_.bucket)) { (bucket, posts, lens) =>
-        val postsArr = posts.toArray
-        val lensArr = lens.toArray
-        if (postsArr.isEmpty) Iterator.empty
-        else if (lensArr.isEmpty)
-          throw new IllegalStateException(
-            s"index invariant violated: bucket $bucket has postings but no doclens row ($root)")
-        else {
-          val dl = lensArr.head
-          val nG = idfsB.value.length
-          // per-group doc → summed tf (int adds — merge order free)
-          val tfByGroup = Array.fill(nG)(new java.util.HashMap[Long, Int]())
-          postsArr.foreach { r =>
-            val gi = groupOfB.value(r.term)
-            val p = PostingCodec.decodeBlocks(r.blocks.map(_.bytes).toSeq)
-            var i = 0
-            while (i < p.size) {
-              tfByGroup(gi).merge(p.docIds(i), p.tfs(i), (a, b) => a + b)
-              i += 1
-            }
-          }
-          val union = new java.util.HashSet[Long]()
-          tfByGroup.foreach(m => union.addAll(m.keySet()))
-          val dIds = dl.docIds
-          val dLens = dl.lens
-          val topk = new Searcher.TopK(kLocal)
-          val it = union.iterator()
-          while (it.hasNext) {
-            val d = it.next()
-            val len = dLens(java.util.Arrays.binarySearch(dIds, d))
-            var s = 0.0
-            var mx = 0.0
-            var gi = 0
-            // fixed caller group order — deterministic accumulation;
-            // association w · (idf · tfNorm) exactly as the oracle writes it
-            while (gi < nG) {
-              val tf = tfByGroup(gi).getOrDefault(d, 0)
-              if (tf > 0) {
-                val part = wsB.value(gi) * (idfsB.value(gi) * Bm25.tfNorm(tf, len, avgdlLocal))
-                s += part
-                if (part > mx) mx = part
-              }
-              gi += 1
-            }
-            // dis-max: best + tie·(sum − best), three IEEE ops in this
-            // exact association (BM25 parts are > 0, so the 0.0 floor on
-            // `mx` never wins for a matched doc)
-            topk.offer(d, if (isDisMax) mx + tieLocal * (s - mx) else s)
-          }
-          topk.result
+    scanBuckets(segmentsDS, PostingRows, live.flatten, buckets, norms = true) { v =>
+      val nG = idfsB.value.length
+      // per-group doc → summed tf (int adds — merge order free)
+      val tfByGroup = Array.fill(nG)(new java.util.HashMap[Long, Int]())
+      v.rows.foreach { r =>
+        val gi = groupOfB.value(r.term)
+        val p = v.decoded(r.term)
+        var i = 0
+        while (i < p.size) {
+          tfByGroup(gi).merge(p.docIds(i), p.tfs(i), (a, b) => a + b)
+          i += 1
         }
       }
-    perBucket
+      val union = new java.util.HashSet[Long]()
+      tfByGroup.foreach(m => union.addAll(m.keySet()))
+      val topk = new Searcher.TopK(k)
+      val it = union.iterator()
+      while (it.hasNext) {
+        val d = it.next()
+        val len = v.lenOf(d)
+        var s = 0.0
+        var mx = 0.0
+        var gi = 0
+        // fixed caller group order — deterministic accumulation;
+        // association w · (idf · tfNorm) exactly as the oracle writes it
+        while (gi < nG) {
+          val tf = tfByGroup(gi).getOrDefault(d, 0)
+          if (tf > 0) {
+            val part = wsB.value(gi) * (idfsB.value(gi) * Bm25.tfNorm(tf, len, avgdl))
+            s += part
+            if (part > mx) mx = part
+          }
+          gi += 1
+        }
+        // dis-max: best + tie·(sum − best), three IEEE ops in this
+        // exact association (BM25 parts are > 0, so the 0.0 floor on
+        // `mx` never wins for a matched doc)
+        topk.offer(d, if (isDisMax) mx + tie * (s - mx) else s)
+      }
+      topk.result
+    }
       .toDF("doc_id", "score")
       .orderBy(desc("score"), asc("doc_id"))
       .limit(k)
@@ -1776,7 +1634,7 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     val tfRows = segmentsDS
       .where($"term".isin(live: _*) && $"bucket".isin(buckets: _*))
       .flatMap { r =>
-        val p = PostingCodec.decodeBlocks(r.blocks.map(_.bytes).toSeq)
+        val p = PostingRows.decode(r)
         val ids = idsB.value
         p.docIds.iterator.zip(p.tfs.iterator)
           .collect { case (d, tf) if ids(d) => (r.term, d, tf.toLong) }
@@ -2016,9 +1874,7 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
       .distinct.sorted.filterNot(negTerms.contains)
     if (mustTerms.isEmpty && phraseToks.isEmpty)
       return search(scoring.mkString(" "), k, negQuery = negTerms.mkString(" "))
-    if (phraseToks.nonEmpty)
-      require(hasPositions,
-        s"bool query with a phrase clause needs the positions sidecar at $root")
+    val phraseTable = if (phraseToks.nonEmpty) Some(positions) else None
     val local = dictRows((scoring ++ negTerms).distinct.sorted)
     if ((mustTerms ++ phraseToks).exists(t => !local.get(t).exists(_.df > 0L)))
       return empty
@@ -2035,89 +1891,46 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     val scoringB = spark.sparkContext.broadcast(liveScoring)
     val phraseB = spark.sparkContext.broadcast(phraseToks)
     val idfB = spark.sparkContext.broadcast(idfByTerm)
-    val kLocal = k
-    val avgdlLocal = stats.avgdl
-    val rootLocal = root
-    val doclens = doclensDS.where($"bucket".isin(buckets: _*))
+    val avgdl = stats.avgdl
 
-    val perBucket =
-      if (phraseToks.isEmpty) {
+    val perBucket = phraseTable match {
+      case None =>
         val scanTerms = (liveScoring ++ negLive).distinct
-        segmentsDS
-          .where($"term".isin(scanTerms.toSeq: _*) && $"bucket".isin(buckets: _*))
-          .groupByKey(_.bucket)
-          .cogroup(doclens.groupByKey(_.bucket)) { (bucket, posts, lens) =>
-            val postsArr = posts.toArray
-            val lensArr = lens.toArray
-            if (postsArr.isEmpty) Iterator.empty
-            else if (lensArr.isEmpty)
-              throw new IllegalStateException(
-                s"index invariant violated: bucket $bucket has postings but no doclens row ($rootLocal)")
-            else {
-              val byRow = postsArr.iterator.map(r => r.term -> r).toMap
-              if (byRow.size != postsArr.length)
-                throw new IllegalStateException(
-                  s"index invariant violated: bucket $bucket holds more than one " +
-                    s"segment row per term (${postsArr.length} rows, ${byRow.size} terms)")
-              val dec = new java.util.HashMap[String, graft.codec.Postings]()
-              def post(t: String): graft.codec.Postings = byRow.get(t) match {
-                case Some(r) => dec.computeIfAbsent(t,
-                  _ => PostingCodec.decodeBlocks(r.blocks.map(_.bytes).toSeq))
-                case None => null
-              }
-              val mustPosts = mustB.value.map(post)
-              if (mustPosts.exists(_ == null)) Iterator.empty
-              else {
-                val candidates =
-                  Searcher.intersectSorted(mustPosts.map(_.docIds).toSeq)
-                val excluded = Searcher.concatSorted(
-                  negB.value.iterator.map(post).filter(_ != null).map(_.docIds).toSeq)
-                Searcher.scoreBoolBucket(candidates, excluded, scoringB.value,
-                  t => { val p = post(t); if (p == null) null else (p.docIds, p.tfs) },
-                  idfB.value, lensArr.head, avgdlLocal, kLocal)
-              }
-            }
+        scanBuckets(segmentsDS, PostingRows, scanTerms.toSeq, buckets, norms = true) { v =>
+          val mustPosts = mustB.value.map(v.decoded)
+          if (mustPosts.exists(_ == null)) Iterator.empty
+          else {
+            val candidates =
+              Searcher.intersectSorted(mustPosts.map(_.docIds).toSeq)
+            val excluded = Searcher.concatSorted(
+              negB.value.iterator.map(v.decoded).filter(_ != null).map(_.docIds).toSeq)
+            Searcher.scoreBoolBucket(candidates, excluded, scoringB.value,
+              t => { val p = v.decoded(t); if (p == null) null else (p.docIds, p.tfs) },
+              idfB.value, v.lenOf, avgdl, k)
           }
-      } else {
+        }
+      case Some(table) =>
         val scanTerms = (liveScoring ++ mustTerms ++ negLive ++ phraseToks).distinct
-        positionsDS
-          .where($"term".isin(scanTerms.toSeq: _*) && $"bucket".isin(buckets: _*))
-          .groupByKey(_.bucket)
-          .cogroup(doclens.groupByKey(_.bucket)) { (bucket, posts, lens) =>
-            val rows = posts.toArray
-            val lensArr = lens.toArray
-            if (rows.isEmpty) Iterator.empty
-            else if (lensArr.isEmpty)
-              throw new IllegalStateException(
-                s"index invariant violated: bucket $bucket has positions but no doclens row ($rootLocal)")
-            else {
-              val byTerm = rows.iterator.map(r =>
-                r.term -> graft.codec.PositionCodec.decodeBlocks(r.blocks.map(_.bytes).toSeq)).toMap
-              if (byTerm.size != rows.length)
-                throw new IllegalStateException(
-                  s"positions invariant violated in bucket $bucket: ${rows.length} rows, " +
-                    s"${byTerm.size} terms")
-              val pts = phraseB.value
-              if (!pts.distinct.forall(byTerm.contains) ||
-                  !mustB.value.forall(byTerm.contains)) Iterator.empty
-              else {
-                val phraseDocs =
-                  Searcher.phraseHitsInBucket(pts, byTerm).map(_._1).toArray
-                java.util.Arrays.sort(phraseDocs)
-                val candidates = Searcher.intersectSorted(
-                  phraseDocs +: mustB.value.map(t => byTerm(t).docIds).toSeq)
-                val excluded = Searcher.concatSorted(
-                  negB.value.iterator.flatMap(byTerm.get).map(_.docIds).toSeq)
-                Searcher.scoreBoolBucket(candidates, excluded, scoringB.value,
-                  t => byTerm.get(t) match {
-                    case Some(pp) => (pp.docIds, pp.positions.map(_.length))
-                    case None => null
-                  },
-                  idfB.value, lensArr.head, avgdlLocal, kLocal)
-              }
-            }
+        scanBuckets(table, PosRows, scanTerms.toSeq, buckets, norms = true) { v =>
+          val pts = phraseB.value
+          if (!pts.distinct.forall(v.has) || !mustB.value.forall(v.has)) Iterator.empty
+          else {
+            val phraseDocs =
+              Searcher.phraseHitsInBucket(pts, v).map(_._1).toArray
+            java.util.Arrays.sort(phraseDocs)
+            val candidates = Searcher.intersectSorted(
+              phraseDocs +: mustB.value.map(t => v.decoded(t).docIds).toSeq)
+            val excluded = Searcher.concatSorted(
+              negB.value.iterator.filter(v.has).map(t => v.decoded(t).docIds).toSeq)
+            Searcher.scoreBoolBucket(candidates, excluded, scoringB.value,
+              t => {
+                val pp = v.decoded(t)
+                if (pp == null) null else (pp.docIds, pp.positions.map(_.length))
+              },
+              idfB.value, v.lenOf, avgdl, k)
           }
-      }
+        }
+    }
 
     perBucket
       .toDF("doc_id", "score")
@@ -2182,46 +1995,119 @@ final class Searcher(spark: SparkSession, root: String, cacheHot: Boolean = fals
     // bucket list straight from the dictionary rows — no separate
     // distinct-bucket scan job
     val touched = liveTerms.flatMap(t => localRows(t).buckets.toSeq).distinct
-    val postings = segmentsDS
-      .where($"term".isin(liveTerms: _*) && $"bucket".isin(touched: _*))
-    val doclens = doclensDS
-      .where($"bucket".isin(touched: _*))
 
     val idfB = spark.sparkContext.broadcast(idfByTerm)
-    val queriesB = spark.sparkContext.broadcast(livePerQuery)
-    val kLocal = k
-    val avgdlLocal = g.avgdl
+    val queriesB = spark.sparkContext.broadcast(livePerQuery.toArray)
+    val avgdl = g.avgdl
     // stored block-max tf-norms came from THIS shard's avgdl; scale UBs
     // for the WAND fallback exactly as the single-query path does
-    val ubScaleLocal = math.max(1.0, g.avgdl / stats.avgdl)
-    val budgetLocal = taatBudgetBytes
-    val countersLocal = counters.orNull
+    val ubScale = math.max(1.0, g.avgdl / stats.avgdl)
+    val countersOrNull = counters.orNull
     val allowB = spark.sparkContext.broadcast(allow)
 
-    postings
-      .groupByKey(_.bucket)
-      .cogroup(doclens.groupByKey(_.bucket)) { (bucket, posts, lens) =>
-        val postsArr = posts.toArray
-        val lensArr = lens.toArray
-        if (postsArr.isEmpty) Iterator.empty
-        else if (lensArr.isEmpty)
-          throw new IllegalStateException(
-            s"index invariant violated: bucket $bucket has postings but no doclens row ($root)")
-        else {
-          // term-at-a-time: decode each term once per bucket task AND
-          // traverse it once for the whole batch (see Searcher.taatBucket
-          // — bit-identical to the per-query WAND loop, EngineSpec-pinned)
-          val cache = new java.util.HashMap[String, graft.codec.Postings]()
-          Searcher.taatBucket(postsArr, lensArr.head, idfB.value,
-            avgdlLocal, kLocal, queriesB.value.toArray, cache,
-            budgetLocal, ubScaleLocal, countersLocal, allowB.value)
-        }
-      }
-      .toDF("query_id", "doc_id", "score")
+    scanBuckets(segmentsDS, PostingRows, liveTerms, touched, norms = true) { v =>
+      // term-at-a-time: decode each term once per bucket task AND
+      // traverse it once for the whole batch (see Searcher.taatBucket
+      // — bit-identical to the per-query WAND loop, EngineSpec-pinned)
+      Searcher.taat(v, idfB.value, avgdl, k, queriesB.value, taatBudgetBytes, ubScale,
+        countersOrNull, allowB.value)
+    }.toDF("query_id", "doc_id", "score")
   }
 }
 
 object Searcher {
+
+  /** How one bucketed index table keys and decodes its rows — one
+    * instance per codec, and the one place in graft.index that decodes a
+    * whole row.
+    */
+  private[index] sealed abstract class RowCodec[R, P <: AnyRef] extends Serializable {
+    def term(r: R): String
+    def bucket(r: R): Int
+    def decode(r: R): P
+  }
+
+  private[index] object PostingRows extends RowCodec[PostingRow, Postings] {
+    def term(r: PostingRow): String = r.term
+    def bucket(r: PostingRow): Int = r.bucket
+    def decode(r: PostingRow): Postings = PostingCodec.decodeBlocks(r.blocks.map(_.bytes).toSeq)
+  }
+
+  private[index] object PosRows extends RowCodec[PosRow, PosPostings] {
+    def term(r: PosRow): String = r.term
+    def bucket(r: PosRow): Int = r.bucket
+    def decode(r: PosRow): PosPostings = PositionCodec.decodeBlocks(r.blocks.map(_.bytes).toSeq)
+  }
+
+  /** One bucket of a pruned `term IN … AND bucket IN …` read, as every
+    * per-bucket kernel sees it. Construction checks the one-row-per-term
+    * invariant (every kernel and the decode cache key by term alone, so a
+    * violating merge artifact must fail loudly, not silently keep one
+    * arbitrary row). `decoded` decodes each term at most once through
+    * `cache`; `indexOf`/`lenOf` are the checked doclens lookups (`doclen`
+    * is null for scans that read no norms). `source` names the index root
+    * in every invariant message.
+    */
+  private[index] final class BucketView[R, P <: AnyRef](
+      val bucket: Int,
+      val rows: Array[R],
+      codec: RowCodec[R, P],
+      val doclen: DocLenRow,
+      source: String,
+      cache: java.util.Map[String, P]) {
+    private val byTerm = new java.util.HashMap[String, R](rows.length * 2)
+    rows.foreach(r => byTerm.put(codec.term(r), r))
+    if (byTerm.size != rows.length)
+      throw new IllegalStateException(
+        s"index invariant violated: bucket $bucket holds more than one row per term " +
+          s"(${rows.length} rows, ${byTerm.size} terms) ($source)")
+
+    def has(t: String): Boolean = byTerm.containsKey(t)
+
+    def row(t: String): Option[R] = Option(byTerm.get(t))
+
+    /** The term's decoded postings in this bucket, or null if it has none. */
+    def decoded(t: String): P = {
+      val r = byTerm.get(t)
+      if (r == null) null.asInstanceOf[P]
+      else cache.computeIfAbsent(t, _ => codec.decode(r))
+    }
+
+    /** Position of `doc` in the bucket's ascending doclens ids, searched
+      * from `from` on.
+      */
+    def indexOf(doc: Long, from: Int = 0): Int = {
+      val i = java.util.Arrays.binarySearch(doclen.docIds, from, doclen.docIds.length, doc)
+      if (i < 0)
+        throw new IllegalStateException(
+          s"index invariant violated: doc $doc in bucket $bucket has postings but no " +
+            s"doclens entry ($source)")
+      i
+    }
+
+    def lenOf(doc: Long): Long = doclen.lens(indexOf(doc))
+  }
+
+  private[index] type PostingView = BucketView[PostingRow, Postings]
+  private[index] type PositionView = BucketView[PosRow, PosPostings]
+
+  /** A bucket's norms row. Postings without one are index corruption
+    * (e.g. a bucketSize mismatch from a bad resume) — fail loudly instead
+    * of silently dropping the bucket's hits.
+    */
+  private[index] def normsOf(bucket: Int, doclen: Option[DocLenRow], source: String): DocLenRow =
+    doclen.getOrElse(throw new IllegalStateException(
+      s"index invariant violated: bucket $bucket has postings but no doclens row ($source)"))
+
+  /** The view a public kernel builds over caller-supplied rows, so direct
+    * callers get the same invariant checks as the scan.
+    */
+  private def callerView(
+      rows: Array[PostingRow],
+      doclen: DocLenRow,
+      cache: java.util.HashMap[String, Postings]): PostingView =
+    new BucketView(doclen.bucket, rows, PostingRows, doclen, "caller-supplied rows",
+      if (cache == null) new java.util.HashMap[String, Postings]() else cache)
 
   /** Driver-side bounded edit distance for the hot-dictionary fuzzy
     * expansion — the textbook two-row DP with the standard band cutoff,
@@ -2329,7 +2215,7 @@ object Searcher {
       scoring: Array[String],
       termDocs: String => (Array[Long], Array[Int]),
       idfByTerm: Map[String, Double],
-      doclen: DocLenRow,
+      lenOf: Long => Long,
       avgdl: Double,
       k: Int): Iterator[Hit] = {
     val nTerms = scoring.length
@@ -2348,11 +2234,7 @@ object Searcher {
     while (i < candidates.length) {
       val id = candidates(i)
       if (java.util.Arrays.binarySearch(excluded, id) < 0) {
-        val di = java.util.Arrays.binarySearch(doclen.docIds, id)
-        if (di < 0)
-          throw new IllegalStateException(
-            s"index invariant violated: doc $id has postings but no doclens entry")
-        val dl = doclen.lens(di)
+        val dl = lenOf(id)
         var s = 0.0
         var j = 0
         while (j < nTerms) {
@@ -2379,18 +2261,18 @@ object Searcher {
     */
   private[index] def phraseHitsInBucket(
       ts: Array[String],
-      byTerm: Map[String, graft.codec.PosPostings]): Iterator[(Long, Long)] = {
+      v: PositionView): Iterator[(Long, Long)] = {
     val distinctTs = ts.distinct
-    if (!distinctTs.forall(byTerm.contains)) return Iterator.empty
+    if (!distinctTs.forall(v.has)) return Iterator.empty
     val maps: Map[String, java.util.HashMap[Long, Array[Int]]] =
       distinctTs.iterator.map { t =>
-        val pp = byTerm(t)
+        val pp = v.decoded(t)
         val m = new java.util.HashMap[Long, Array[Int]](pp.size * 2)
         var i = 0
         while (i < pp.size) { m.put(pp.docIds(i), pp.positions(i)); i += 1 }
         t -> m
       }.toMap
-    val lead = byTerm(distinctTs.minBy(t => byTerm(t).size))
+    val lead = v.decoded(distinctTs.minBy(t => v.decoded(t).size))
     val others = distinctTs.map(maps)
     val first = maps(ts(0))
     Iterator.range(0, lead.size).flatMap { i =>
@@ -2433,18 +2315,18 @@ object Searcher {
   private[index] def proximityHitsInBucket(
       ts: Array[String],
       window: Int,
-      byTerm: Map[String, graft.codec.PosPostings],
+      v: PositionView,
       only: java.util.HashSet[Long] = null): Iterator[(Long, Long, Long)] = {
-    if (!ts.forall(byTerm.contains)) return Iterator.empty
+    if (!ts.forall(v.has)) return Iterator.empty
     val m = ts.length
     val maps: Array[java.util.HashMap[Long, Array[Int]]] = ts.map { t =>
-      val pp = byTerm(t)
+      val pp = v.decoded(t)
       val h = new java.util.HashMap[Long, Array[Int]](pp.size * 2)
       var i = 0
       while (i < pp.size) { h.put(pp.docIds(i), pp.positions(i)); i += 1 }
       h
     }
-    val lead = byTerm(ts.minBy(t => byTerm(t).size))
+    val lead = v.decoded(ts.minBy(t => v.decoded(t).size))
     Iterator.range(0, lead.size).flatMap { i =>
       val docId = lead.docIds(i)
       var all = only == null || only.contains(docId)
@@ -2501,19 +2383,19 @@ object Searcher {
   private[index] def orderedSpanHitsInBucket(
       ts: Array[String],
       window: Int,
-      byTerm: Map[String, graft.codec.PosPostings]): Iterator[(Long, Long, Long)] = {
+      v: PositionView): Iterator[(Long, Long, Long)] = {
     val distinctTs = ts.distinct
-    if (!distinctTs.forall(byTerm.contains)) return Iterator.empty
+    if (!distinctTs.forall(v.has)) return Iterator.empty
     val m = ts.length
     val maps: Map[String, java.util.HashMap[Long, Array[Int]]] =
       distinctTs.iterator.map { t =>
-        val pp = byTerm(t)
+        val pp = v.decoded(t)
         val h = new java.util.HashMap[Long, Array[Int]](pp.size * 2)
         var i = 0
         while (i < pp.size) { h.put(pp.docIds(i), pp.positions(i)); i += 1 }
         t -> h
       }.toMap
-    val lead = byTerm(distinctTs.minBy(t => byTerm(t).size))
+    val lead = v.decoded(distinctTs.minBy(t => v.decoded(t).size))
     Iterator.range(0, lead.size).flatMap { i =>
       val docId = lead.docIds(i)
       if (!distinctTs.forall(t => maps(t).containsKey(docId))) Iterator.empty
@@ -2557,30 +2439,18 @@ object Searcher {
     * same doc's disjunctive score), keep a bounded per-query top-k.
     */
   private[index] def conjunctiveBucket(
-      rows: Array[PostingRow],
-      doclen: DocLenRow,
+      v: PostingView,
       idfByTerm: Map[String, Double],
       avgdl: Double,
       k: Int,
-      queries: Array[(Int, Array[String])],
-      decodedCache: java.util.HashMap[String, graft.codec.Postings]): Iterator[(Int, Long, Double)] = {
-    val byTerm = rows.iterator.map(r => r.term -> r).toMap
-    if (byTerm.size != rows.length)
-      throw new IllegalStateException(
-        "index invariant violated: bucket holds more than one segment row " +
-          s"per term (${rows.length} rows, ${byTerm.size} terms)")
-    val dIds = doclen.docIds
-    val dLens = doclen.lens
-    def decoded(t: String): graft.codec.Postings =
-      decodedCache.computeIfAbsent(t,
-        _ => PostingCodec.decodeBlocks(byTerm(t).blocks.map(_.bytes).toSeq))
+      queries: Array[(Int, Array[String])]): Iterator[(Int, Long, Double)] =
     queries.iterator.flatMap { case (qid, ts) =>
       // every term must have postings in this bucket (the bucket came
       // from the intersection of term bucket lists, but a multi-shard
       // caller may pass wider sets — skip, never throw)
-      if (!ts.forall(byTerm.contains)) Iterator.empty
+      if (!ts.forall(v.has)) Iterator.empty
       else {
-        val posts: Array[graft.codec.Postings] = ts.map(decoded)
+        val posts: Array[Postings] = ts.map(v.decoded)
         val idfs: Array[Double] = ts.map(idfByTerm)
         val m = ts.length
         var sparse = 0
@@ -2601,11 +2471,7 @@ object Searcher {
             t += 1
           }
           if (ok) {
-            val dli = java.util.Arrays.binarySearch(dIds, d)
-            if (dli < 0)
-              throw new IllegalStateException(
-                s"index invariant violated: doc $d has postings but no doclens entry")
-            val dl = dLens(dli)
+            val dl = v.lenOf(d)
             // left fold over the query's sorted terms — same order and
             // arithmetic as the disjunctive paths
             var score = 0.0
@@ -2618,7 +2484,6 @@ object Searcher {
         topk.result.map(h => (qid, h.docId, h.score))
       }
     }
-  }
 
   /** Per-bucket minimum-should-match kernel: for each query, visit its
     * PRESENT terms in ascending term order (the query arrays arrive
@@ -2630,41 +2495,25 @@ object Searcher {
     * bucket width like the synonym path.
     */
   private[index] def minMatchBucket(
-      rows: Array[PostingRow],
-      doclen: DocLenRow,
+      v: PostingView,
       idfByTerm: Map[String, Double],
       avgdl: Double,
       k: Int,
-      queries: Array[(Int, Array[String], Int)],
-      decodedCache: java.util.HashMap[String, graft.codec.Postings]): Iterator[(Int, Long, Double)] = {
-    val byTerm = rows.iterator.map(r => r.term -> r).toMap
-    if (byTerm.size != rows.length)
-      throw new IllegalStateException(
-        "index invariant violated: bucket holds more than one segment row " +
-          s"per term (${rows.length} rows, ${byTerm.size} terms)")
-    val dIds = doclen.docIds
-    val dLens = doclen.lens
-    def decoded(t: String): graft.codec.Postings =
-      decodedCache.computeIfAbsent(t,
-        _ => PostingCodec.decodeBlocks(byTerm(t).blocks.map(_.bytes).toSeq))
+      queries: Array[(Int, Array[String], Int)]): Iterator[(Int, Long, Double)] =
     queries.iterator.flatMap { case (qid, ts, m) =>
-      val present = ts.filter(byTerm.contains) // ts sorted → present sorted
+      val present = ts.filter(v.has) // ts sorted → present sorted
       if (present.length < m) Iterator.empty
       else {
         val counts = new java.util.HashMap[Long, Int]()
         val scores = new java.util.HashMap[Long, Double]()
         present.foreach { t =>
-          val p = decoded(t)
+          val p = v.decoded(t)
           val idf = idfByTerm(t)
           var i = 0
           while (i < p.size) {
             val d = p.docIds(i)
-            val dli = java.util.Arrays.binarySearch(dIds, d)
-            if (dli < 0)
-              throw new IllegalStateException(
-                s"index invariant violated: doc $d has postings but no doclens entry")
             counts.merge(d, 1, (a, b) => a + b)
-            scores.merge(d, idf * Bm25.tfNorm(p.tfs(i), dLens(dli), avgdl),
+            scores.merge(d, idf * Bm25.tfNorm(p.tfs(i), v.lenOf(d), avgdl),
               (a, b) => a + b)
             i += 1
           }
@@ -2678,7 +2527,6 @@ object Searcher {
         topk.result.map(h => (qid, h.docId, h.score))
       }
     }
-  }
 
   /** Memory budget for one task's dense TAAT accumulator chunk. One
     * accumulator row costs 8·bucketDocs bytes; the default index geometry
@@ -2751,39 +2599,42 @@ object Searcher {
       avgdl: Double,
       k: Int,
       queries: Array[(Int, Array[String])],
-      decodedCache: java.util.HashMap[String, graft.codec.Postings],
+      decodedCache: java.util.HashMap[String, Postings],
       budgetBytes: Long = DefaultTaatBudgetBytes,
       ubScale: Double = 1.0,
       counters: SearchCounters = null,
-      allow: Option[Long => Boolean] = None): Iterator[(Int, Long, Double)] = {
-    val dIds = doclen.docIds
-    val dLens = doclen.lens
-    val nb = dIds.length
+      allow: Option[Long => Boolean] = None): Iterator[(Int, Long, Double)] =
+    taat(callerView(rows, doclen, decodedCache), idfByTerm, avgdl, k, queries,
+      budgetBytes, ubScale, counters, allow)
 
-    // one row per (term, bucket) is an index invariant — BOTH taat paths
-    // (the dense path's `pre` cache and the fallback's byTerm map) and
-    // the shared decode cache key by term alone, so a violating merge
-    // artifact must fail loudly, not silently keep one arbitrary row
-    val byTerm = rows.iterator.map(r => r.term -> r).toMap
-    if (byTerm.size != rows.length)
-      throw new IllegalStateException(
-        "index invariant violated: bucket holds more than one segment row " +
-          s"per term (${rows.length} rows, ${byTerm.size} terms)")
+  private def taat(
+      v: PostingView,
+      idfByTerm: Map[String, Double],
+      avgdl: Double,
+      k: Int,
+      queries: Array[(Int, Array[String])],
+      budgetBytes: Long,
+      ubScale: Double,
+      counters: SearchCounters,
+      allow: Option[Long => Boolean]): Iterator[(Int, Long, Double)] = {
+    val dIds = v.doclen.docIds
+    val dLens = v.doclen.lens
+    val nb = dIds.length
 
     if (8L * math.max(nb, 1) > budgetBytes) {
       // dense accumulation cannot fit one row — per-query WAND fallback
-      // (bit-identical results; shared decode cache keeps the batch's
+      // (bit-identical results; the view's decode cache keeps the batch's
       // decode-once property)
       return queries.iterator.flatMap { case (qid, ts) =>
-        val qRows = ts.flatMap(byTerm.get)
+        val qRows = ts.flatMap(v.row)
         if (qRows.isEmpty) Iterator.empty
-        else wandBucket(qRows, doclen, idfByTerm, avgdl, ubScale, k,
-          exact = false, allow, decodedCache, counters)
+        else wand(v, qRows, idfByTerm, avgdl, ubScale, k,
+          exact = false, allow, predecoded = true, counters, after = None)
           .map(h => (qid, h.docId, h.score))
       }
     }
 
-    val rowsSorted = rows.sortBy(_.term)
+    val rowsSorted = v.rows.sortBy(_.term)
     // term → subscribing query positions (ascending, queries scanned in
     // order), materialized once as arrays — the chunk loop only filters
     var maxSub = 0
@@ -2818,8 +2669,7 @@ object Searcher {
     val pre = new java.util.HashMap[String, (Array[Int], Array[Double])]()
     def preFor(r: PostingRow): (Array[Int], Array[Double]) =
       pre.computeIfAbsent(r.term, _ => {
-        val post = decodedCache.computeIfAbsent(r.term,
-          _ => PostingCodec.decodeBlocks(r.blocks.map(_.bytes).toSeq))
+        val post = v.decoded(r.term)
         val idf = idfByTerm(r.term)
         val pd = post.docIds
         val pt = post.tfs
@@ -2828,11 +2678,7 @@ object Searcher {
         var p = 0
         var from = 0
         while (p < pd.length) {
-          val d = java.util.Arrays.binarySearch(dIds, from, nb, pd(p))
-          if (d < 0)
-            throw new IllegalStateException(
-              s"index invariant violated: term '${r.term}' bucket ${r.bucket} " +
-                s"posting docId ${pd(p)} has no doclens entry")
+          val d = v.indexOf(pd(p), from)
           di(p) = d
           from = d + 1
           w(p) = idf * Bm25.tfNorm(pt(p), dLens(d), avgdl)
@@ -2918,7 +2764,7 @@ object Searcher {
       ubScale: Double,
       maxTfNorm: Double,
       blocks: Array[EncBlock],
-      pre: graft.codec.Postings) {
+      pre: Postings) {
     val ub: Double = idf * maxTfNorm * ubScale // bucket-local term UB
     private val idfScaled = idf * ubScale
 
@@ -2929,7 +2775,7 @@ object Searcher {
     def curBlockUb: Double =
       if (pre != null || exhausted) ub
       else idfScaled * blocks(blockIdx).maxTfNorm
-    private var decoded: graft.codec.Postings = pre
+    private var decoded: Postings = pre
     private var blockIdx = 0
     private var pos = 0
     var curDoc: Long = -1L
@@ -3015,27 +2861,35 @@ object Searcher {
       k: Int,
       exact: Boolean,
       allow: Option[Long => Boolean],
-      decodedCache: java.util.HashMap[String, graft.codec.Postings] = null,
+      decodedCache: java.util.HashMap[String, Postings] = null,
       counters: SearchCounters = null,
-      after: Option[(Double, Long)] = None): Iterator[Hit] = {
+      after: Option[(Double, Long)] = None): Iterator[Hit] =
+    wand(callerView(rows, doclen, decodedCache), rows, idfByTerm, avgdl, ubScale, k, exact,
+      allow, predecoded = decodedCache != null, counters, after)
+
+  /** [[wandBucket]] over `rows` of the view `v`. `predecoded` selects the
+    * cursors' backing: the view's decode-once cache (batch and hot
+    * serving) or lazily decoded blocks (single query — skipped blocks are
+    * never decoded).
+    */
+  private def wand(
+      v: PostingView,
+      rows: Array[PostingRow],
+      idfByTerm: Map[String, Double],
+      avgdl: Double,
+      ubScale: Double,
+      k: Int,
+      exact: Boolean,
+      allow: Option[Long => Boolean],
+      predecoded: Boolean,
+      counters: SearchCounters,
+      after: Option[(Double, Long)]): Iterator[Hit] = {
     // cursors in fixed sorted-term order → deterministic accumulation
-    val byTerm = rows.sortBy(_.term)
-    val cursors = byTerm.map { r =>
-      val pre =
-        if (decodedCache == null) null
-        else decodedCache.computeIfAbsent(r.term,
-          _ => PostingCodec.decodeBlocks(r.blocks.map(_.bytes).toSeq))
+    val cursors = rows.sortBy(_.term).map { r =>
+      val pre = if (predecoded) v.decoded(r.term) else null
       new Cursor(r.term, idfByTerm(r.term), ubScale, r.maxTfNorm, r.blocks, pre)
     }
     if (cursors.isEmpty) return Iterator.empty
-
-    // docId → docLen within this bucket (ascending arrays → binary search)
-    val dIds = doclen.docIds
-    val dLens = doclen.lens
-    def lenOf(docId: Long): Long = {
-      val i = java.util.Arrays.binarySearch(dIds, docId)
-      dLens(i)
-    }
 
     val topk = new TopK(k)
     val live = mutable.ArrayBuffer(cursors: _*)
@@ -3080,7 +2934,7 @@ object Searcher {
             }
             if ((exact || blockBound >= theta) && allow.forall(_(pivotDoc))) {
               scored += 1
-              val dl = lenOf(pivotDoc)
+              val dl = v.lenOf(pivotDoc)
               var s = 0.0
               // fixed term order: `cursors` (sorted by term), not `sorted`
               var c = 0

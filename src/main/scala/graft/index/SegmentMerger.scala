@@ -41,7 +41,7 @@ object SegmentMerger {
     import spark.implicits._
     spark.read.parquet(IndexBuilder.Layout(root).segments).as[PostingRow]
       .flatMap { row =>
-        val p = PostingCodec.decodeBlocks(row.blocks.map(_.bytes).toSeq)
+        val p = Searcher.PostingRows.decode(row)
         Iterator.tabulate(p.size)(i => (p.docIds(i), row.term, p.tfs(i).toLong))
       }
       .toDF("doc_id", "term", "tf")
@@ -154,7 +154,7 @@ object SegmentMerger {
             // decode each generation's (already-sorted, disjoint-range)
             // list, keep live postings, merge by docId
             val pairs = rows.iterator.flatMap { r =>
-              val p = PostingCodec.decodeBlocks(r.blocks.map(_.bytes).toSeq)
+              val p = Searcher.PostingRows.decode(r)
               Iterator.tabulate(p.size)(i => (p.docIds(i), p.tfs(i)))
             }.filter(p => java.util.Arrays.binarySearch(dIds, p._1) >= 0)
               .toArray.sortBy(_._1)

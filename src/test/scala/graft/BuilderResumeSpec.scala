@@ -37,6 +37,18 @@ class BuilderResumeSpec extends SparkSpec {
     assert(Meta.readManifest(root).nonEmpty)
   }
 
+  test("awaitAll awaits every thunk; the first failure keeps its type, later ones are suppressed") {
+    val second = new IllegalStateException("second")
+    val finished = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val e = intercept[IllegalArgumentException](IndexBuilder.awaitAll(Seq(
+      () => throw new IllegalArgumentException("first"),
+      () => throw second,
+      () => { Thread.sleep(200); finished.set(true) })))
+    assert(e.getMessage == "first")
+    assert(e.getSuppressed.toSeq == Seq(second))
+    assert(finished.get, "a later thunk was still running when awaitAll threw")
+  }
+
   test("SQL function surface: graft_dot / graft_lsh_bands / graft_topk") {
     GraftExtensions.register(spark)
     val dot = spark.sql("SELECT graft_dot(array(1.0D, 2.0D), array(3.0D, 4.0D))")

@@ -84,4 +84,67 @@ class IntegritySpec extends SparkSpec {
     assert(report(root)("bad_pos") == dropped.df,
       "dropped positional row not fully flagged")
   }
+
+  test("doclens corruption fails every bucket-scan entry with the bucket or doc and the root") {
+    val root = build()
+    val q = "def class"
+    // a doc every entry reaches: it holds both query terms, so it passes
+    // the conjunctive, min-match and bool gates; k exceeds the corpus, so
+    // the WAND threshold never rises far enough to skip it
+    val victim = docs.collectFirst { case (d, t)
+      if Set("def", "class").subsetOf(graft.analyze.Tokenizer.tokenize(t).toSet) => d }.get
+    val k = 1000
+    val entries: Seq[(String, (Searcher, Searcher) => Any)] = Seq(
+      "search (WAND)" -> ((s, _) => s.search(q, k).collect()),
+      "search (exact)" -> ((s, _) => s.search(q, k, exact = true).collect()),
+      "searchMany" -> ((s, _) => s.searchMany(Seq(0 -> q), k).collect()),
+      "searchConjunctiveMany" -> ((s, _) => s.searchConjunctiveMany(Seq(0 -> q), k).collect()),
+      "searchMinMatchMany" -> ((s, _) => s.searchMinMatchMany(Seq((0, q, 2)), k).collect()),
+      "scoreAllMatched" -> ((s, _) => s.scoreAllMatched(q).collect()),
+      "searchSynonym" -> ((s, _) => s.searchSynonym(Seq(Seq("def"), Seq("class")), k).collect()),
+      "searchSortedByLen" -> ((s, _) => s.searchSortedByLen(q, k).collect()),
+      "searchBool" -> ((s, _) => s.searchBool(k, must = "def", should = "class").collect()),
+      "searchHot" -> ((_, h) => h.searchHot(q, k)))
+    val bucket = (victim / Meta.readStats(root).bucketSize).toInt
+    val dlPath = s"$root/doclens"
+    val dlRows = spark.read.parquet(dlPath).as[DocLenRow].collect()
+    val cases: Seq[(String, Seq[DocLenRow], String)] = Seq(
+      ("bucket row dropped", dlRows.filter(_.bucket != bucket).toSeq, s"bucket $bucket"),
+      ("doc dropped", dlRows.map { r =>
+        val i = r.docIds.indexOf(victim)
+        if (i < 0) r
+        else r.copy(docIds = r.docIds.patch(i, Nil, 1), lens = r.lens.patch(i, Nil, 1))
+      }.toSeq, s"doc $victim"))
+    for ((corruption, rows, names) <- cases) {
+      rows.toDS().write.mode(SaveMode.Overwrite).parquet(dlPath)
+      val s = new Searcher(spark, root)
+      val h = new Searcher(spark, root, cacheHot = true)
+      for ((entry, run) <- entries) {
+        val e = intercept[Exception](run(s, h))
+        val cause = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .collectFirst { case ise: IllegalStateException => ise }
+        assert(cause.exists(c => c.getMessage.contains(names) && c.getMessage.contains(root)),
+          s"$corruption / $entry: want an IllegalStateException naming '$names' and the root, " +
+            s"got $e")
+      }
+    }
+    dlRows.toSeq.toDS().write.mode(SaveMode.Overwrite).parquet(dlPath)
+  }
+
+  test("positions accessor: remediation before buildPositions, answers after on the same Searcher") {
+    val root = Files.createTempDirectory("graft-idx-latepos-").toString
+    val df = docs.toDF("doc_id", "content")
+    IndexBuilder.build(spark, df, root, targetBuckets = 4)
+    val s = new Searcher(spark, root)
+    // the first two tokens of a doc: a phrase the index must find
+    val phrase = Seq(0 -> graft.analyze.Tokenizer.tokenize(docs.head._2).take(2).mkString(" "))
+    for (run <- Seq(() => s.integrityReport(checkPositions = true), () => s.phraseMany(phrase))) {
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage.contains("run IndexBuilder.buildPositions first"), e.getMessage)
+    }
+    IndexBuilder.buildPositions(spark, df, root)
+    val got = s.phraseMany(phrase).collect().toSeq
+    assert(got.nonEmpty && got == new Searcher(spark, root).phraseMany(phrase).collect().toSeq)
+    assert(s.integrityReport(checkPositions = true).head().getAs[Long]("bad_pos") == 0L)
+  }
 }

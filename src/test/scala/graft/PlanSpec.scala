@@ -99,6 +99,52 @@ class PlanSpec extends SparkSpec {
     assert(!plan.contains("WindowExec"), s"per-query merge still a window:\n$plan")
   }
 
+  test("bucket-scan entries keep their exchange and cogroup counts") {
+    // every per-bucket Searcher operator reads through one scan; this pins
+    // each entry's executed-plan shape (Exchange nodes, CoGroup nodes) so
+    // a change to that scan cannot add a shuffle unnoticed
+    val root = Files.createTempDirectory("graft-plan-scan-").toString
+    val indexed = spark.range(0, 100).map(i => (i, CorpusGen.genDoc(42L, i).content))
+      .toDF("doc_id", "content")
+    IndexBuilder.build(spark, indexed, root, targetBuckets = 4)
+    IndexBuilder.buildPositions(spark, indexed, root)
+    val s = new graft.index.Searcher(spark, root)
+    def shape(df: org.apache.spark.sql.DataFrame): (Int, Int) = {
+      val nodes = planOf(df).linesIterator
+        .map(_.dropWhile(c => " +-:*".contains(c)).takeWhile(_ != ' ')).toSeq
+      (nodes.count(_.endsWith("Exchange")), nodes.count(_ == "CoGroup"))
+    }
+    val got = Seq(
+      "search" -> shape(s.search("def return id0", 10)),
+      "search exact" -> shape(s.search("def return id0", 10, exact = true)),
+      "searchNot" -> shape(s.searchNot("def return", "class", 10)),
+      "searchMany" -> shape(s.searchMany(Seq(0 -> "def return", 1 -> "class id0"), 10)),
+      "searchConjunctiveMany" -> shape(s.searchConjunctiveMany(Seq(0 -> "def return"), 10)),
+      "searchMinMatchMany" -> shape(s.searchMinMatchMany(Seq((0, "def return class", 2)), 10)),
+      "scoreAllMatched" -> shape(s.scoreAllMatched("def return")),
+      "searchSynonym" -> shape(s.searchSynonym(Seq(Seq("def", "class"), Seq("return")), 10)),
+      "searchSortedByLen" -> shape(s.searchSortedByLen("def return", 10)),
+      "searchBool" -> shape(s.searchBool(10, must = "def", should = "return", mustNot = "class")),
+      "searchBool phrase" -> shape(s.searchBool(10, must = "def", phrase = "def class")),
+      "phraseMany" -> shape(s.phraseMany(Seq(0 -> "def class"))),
+      "proximityMany" -> shape(s.proximityMany(Seq((0, "def class", 5)))),
+      "spanOrderedMany" -> shape(s.spanOrderedMany(Seq((0, "def class", 5)))),
+      "countMany" -> shape(s.countMany(Seq(0 -> "def class"))),
+      "snippetMany" -> shape(s.snippetMany(Seq(0 -> "def return"), 5)))
+    // recorded from the per-shell implementation the scan replaced
+    val want = Map(
+      "search" -> (2, 1), "search exact" -> (2, 1), "searchNot" -> (2, 1),
+      "searchMany" -> (4, 1), "searchConjunctiveMany" -> (4, 1),
+      "searchMinMatchMany" -> (4, 1), "scoreAllMatched" -> (2, 1),
+      "searchSynonym" -> (2, 1), "searchSortedByLen" -> (2, 1),
+      "searchBool" -> (2, 1), "searchBool phrase" -> (2, 1),
+      "phraseMany" -> (2, 0), "proximityMany" -> (2, 0), "spanOrderedMany" -> (2, 0),
+      "countMany" -> (4, 0), "snippetMany" -> (3, 0))
+    got.foreach { case (entry, sh) =>
+      assert(sh == want(entry), s"$entry: (exchanges, cogroups) = $sh, want ${want(entry)}")
+    }
+  }
+
   test("hot terms are bucket-salted: posting-row size is bounded by bucket width") {
     // a term in EVERY doc ("def" is in every generated doc) must be split
     // into one posting row per docId-bucket — no task ever materializes a
