@@ -2,7 +2,7 @@ package graft.index
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -104,6 +104,14 @@ object IndexBuilder {
       .forall(st => Files.exists(layout.statusFile(st)))
   }
 
+  /** The bucket of a doc: exact integral `doc_id div bucketSize`, cast to
+    * INT. Every stage that buckets docs uses this one expression; the cast
+    * does not saturate, so [[buildFromTf]]'s `require` on
+    * maxDocId / bucketSize is what keeps it in range.
+    */
+  private def bucketOf(bucketSize: Long): Column =
+    expr(s"cast(doc_id div ${bucketSize}L as int)")
+
   /** Build the index from an existing tf table (doc_id, term, tf) — the
     * shared path for fresh builds and LSM merges (SegmentMerger decodes
     * source segments back to tf rows and rebuilds here, so merged
@@ -193,8 +201,8 @@ object IndexBuilder {
     val maxDocId = scalars.getLong(0)
     val totalTokens = scalars.getLong(1)
     val avgdl = totalTokens.toDouble / nDocs.toDouble
-    // bucket ids must fit an Int: bucket = cast(docId div bucketSize as
-    // int) here, a BIGINT→INT cast that raises CAST_OVERFLOW under
+    // bucket ids must fit an Int: bucket = [[bucketOf]] (cast(docId div
+    // bucketSize as int)), a BIGINT→INT cast that raises CAST_OVERFLOW under
     // Spark's default ANSI mode and wraps with ANSI off (it never
     // saturates), while the searcher's .toInt wraps — this require is
     // the real guard, failing before any stage can hit either. 2³¹
@@ -230,7 +238,7 @@ object IndexBuilder {
           // struct array_sort orders by the unique doc_id, reproducing
           // the former sortBy exactly
           tf.groupBy($"doc_id").agg(sum($"tf").as("dl"))
-            .withColumn("bucket", expr(s"cast(doc_id div ${bucketSize}L as int)"))
+            .withColumn("bucket", bucketOf(bucketSize))
             .groupBy($"bucket")
             .agg(array_sort(collect_list(struct($"doc_id", $"dl"))).as("p"))
             .select($"bucket",
@@ -267,7 +275,7 @@ object IndexBuilder {
       // dl via window over the doc_id shuffle — no second pass / join
       val wDoc = Window.partitionBy(col("doc_id"))
       tf.withColumn("dl", sum(col("tf")).over(wDoc))
-        .withColumn("bucket", expr(s"cast(doc_id div ${bucketSize}L as int)"))
+        .withColumn("bucket", bucketOf(bucketSize))
         .select($"term", $"bucket", $"doc_id", $"tf", $"dl")
         .repartition(
           math.max(buckets, spark.sessionState.conf.numShufflePartitions),
@@ -422,7 +430,7 @@ object IndexBuilder {
       .repartition(spark.sessionState.conf.numShufflePartitions, col(idCol))
       .select(col(idCol).as("doc_id"),
         posexplode(Tokenizer.tokensCol(col(textCol))).as(Seq("pos", "term")))
-      .withColumn("bucket", expr(s"cast(doc_id div ${bucketSize}L as int)"))
+      .withColumn("bucket", bucketOf(bucketSize))
       .select($"term", $"bucket", $"doc_id", $"pos")
       .repartition(nPart, col("bucket"), pmod(hash(col("term")),
         lit(math.max(1, spark.sessionState.conf.numShufflePartitions / buckets))))

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.{Quantize, TopKAgg}
+
 /** Vector similarity operators over the `embeddings` table — the direct
   * analogs of the reference's exact-search / distance surface:
   * `search(exact=true)` (/root/reference/include/usearch/index.hpp:4251-4268),
@@ -34,66 +36,169 @@ object Similarity {
     s"list_dot_product($a::DOUBLE[], $b::DOUBLE[]) / " +
       s"(sqrt(list_dot_product($a::DOUBLE[], $a::DOUBLE[])) * sqrt(list_dot_product($b::DOUBLE[], $b::DOUBLE[])))"
 
-  /** Exact brute-force cosine top-k for the query vector `vec_id = 0` —
-    * the `search(exact=true)` analog: score every member, bounded top-k
-    * (Catalyst plans orderBy+limit as TakeOrderedAndProject: per-partition
-    * partial top-k + single ordered merge, the distributed `merge_into`).
+  /** One single-query top-k ranking: `raw` descending for a similarity
+    * (ascending for a distance), `vec_id` ascending on ties. Catalyst
+    * plans orderBy+limit as TakeOrderedAndProject: a per-partition
+    * partial top-k and one ordered merge, the distributed `merge_into`.
     */
-  def knnExact(spark: SparkSession, dir: String, k: Int = 10,
-      labelFilter: Option[Int] = None, queryVecId: Long = 0L): DataFrame = {
-    val e = emb(spark, dir)
-    val q = broadcast(e.where(col("vec_id") === queryVecId)
-      .select(col("embedding").as("q_embedding")))
-    val base = labelFilter.map(l => e.where(col("label") === l)).getOrElse(e)
-    base.crossJoin(q)
-      .select(col("vec_id"), cosine(col("embedding"), col("q_embedding")).as("cos_raw"))
-      .orderBy(desc("cos_raw"), asc("vec_id"))
-      .limit(k)
-      .select(col("vec_id"), round(col("cos_raw"), 6).as("cos_sim"))
+  private def rankTopK(scored: DataFrame, k: Int, ascending: Boolean): DataFrame =
+    scored.orderBy(if (ascending) asc("raw") else desc("raw"), asc("vec_id")).limit(k)
+
+  /** [[rankTopK]] emitted as `(vec_id, round(raw, 6) AS out)`. A distance
+    * adds `+ 0.0`: 1 − cos(v, v) and l2sq can cancel to a tiny negative
+    * that rounds to −0.0 in one engine and +0.0 in the other.
+    */
+  private def emitTopK(scored: DataFrame, k: Int, out: String,
+      ascending: Boolean = false): DataFrame = {
+    val rounded = round(col("raw"), 6)
+    rankTopK(scored, k, ascending)
+      .select(col("vec_id"), (if (ascending) rounded + lit(0.0) else rounded).as(out))
   }
 
-  def knnExactSql(k: Int = 10, labelFilter: Option[Int] = None,
-      queryVecId: Long = 0L): String = {
+  /** The scalar kind a cosine kNN scores in — the reference's
+    * `scalar_kind_t` as a parameter of one search path. `col` rounds a
+    * stored vector in Spark and `sql` is its DuckDB twin; the pair must
+    * produce the same doubles (or exact integers), so the quantized
+    * cosine stays bit-identical across engines.
+    */
+  final case class Quantizer(col: Column => Column, sql: String => String)
+
+  object Quantizer {
+    /** The stored vector as is: the f64 exact search. */
+    val Exact: Quantizer = Quantizer(v => v, v => v)
+
+    /** i8 storage + search, the reference's headline memory/downcasting
+      * feature (README.md:249-269; casts index_plugins.hpp:1170-1191).
+      * Integer dot products ≤ 127²·dim are exact doubles, so the scores
+      * are bit-identical across engines by construction.
+      */
+    val I8: Quantizer = Quantizer(Quantize.i8, Quantize.i8Sql)
+
+    /** IEEE binary16 half precision (index_plugins.hpp:299-352), rounded
+      * in pure double arithmetic; halves are exact doubles, so the cosine
+      * stays exact across engines.
+      */
+    val F16: Quantizer = Quantizer(Quantize.f16, Quantize.f16Sql)
+
+    /** bfloat16 (BENCHMARKS.md:46-49; `bf16_bits_t` index_plugins.hpp:91-92):
+      * [[F16]]'s construction with 8 significand bits.
+      */
+    val Bf16: Quantizer = Quantizer(Quantize.bf16, Quantize.bf16Sql)
+  }
+
+  /** Brute-force cosine top-k of the query vector in `q`'s scalar kind —
+    * the `search(exact=true)` analog: score every member (or only the
+    * `candidates` vec_ids, e.g. an IVF probe's cells), bounded top-k.
+    * `labelFilter` is the `filtered_search` predicate applied to the
+    * scored side; the query vector itself may carry any label.
+    */
+  def knnQuantized(spark: SparkSession, dir: String, q: Quantizer, k: Int = 10,
+      queryVecId: Long = 0L, labelFilter: Option[Int] = None,
+      candidates: Option[DataFrame] = None): DataFrame = {
+    val e = emb(spark, dir)
+      .select(col("vec_id"), col("label"), q.col(col("embedding")).as("v"))
+    val qv = broadcast(e.where(col("vec_id") === queryVecId).select(col("v").as("qv")))
+    val filtered = labelFilter.map(l => e.where(col("label") === l)).getOrElse(e)
+    val base = candidates.fold(filtered)(_.join(filtered, "vec_id"))
+    emitTopK(base.crossJoin(qv)
+      .select(col("vec_id"), cosine(col("v"), col("qv")).as("raw")), k, "cos_sim")
+  }
+
+  /** DuckDB twin of [[knnQuantized]] over every member. */
+  def knnQuantizedSql(q: Quantizer, k: Int = 10, queryVecId: Long = 0L,
+      labelFilter: Option[Int] = None): String = {
     val where = labelFilter.map(l => s"WHERE label = $l").getOrElse("")
-    s"""WITH q AS (SELECT embedding AS q_embedding FROM embeddings WHERE vec_id = $queryVecId)
-       |SELECT vec_id, round(${cosineSql("embedding", "q_embedding")}, 6) AS cos_sim
-       |FROM embeddings, q $where
-       |ORDER BY ${cosineSql("embedding", "q_embedding")} DESC, vec_id
+    s"""WITH qe AS (SELECT vec_id, label, ${q.sql("embedding")} AS v FROM embeddings),
+       |q AS (SELECT v AS qv FROM qe WHERE vec_id = $queryVecId)
+       |SELECT vec_id, round(${cosineSql("v", "qv")}, 6) AS cos_sim
+       |FROM qe, q $where
+       |ORDER BY ${cosineSql("v", "qv")} DESC, vec_id
        |LIMIT $k""".stripMargin
   }
 
-  /** i8-quantized exact top-k — quantized storage + search, the
-    * reference's headline memory/downcasting feature
-    * (/root/reference/README.md:249-269; casts
-    * index_plugins.hpp:1170-1191). Integer dot products ≤ 127²·dim stay
-    * exactly representable in doubles, so the quantized scores are
-    * bit-identical cross-engine by construction. Recall vs the f64 exact
-    * path is gated in QuantizeSpec and exported by [[recallI8]].
-    */
-  def knnI8(spark: SparkSession, dir: String, k: Int = 10,
-      queryVecId: Long = 0L): DataFrame = {
-    val e = emb(spark, dir)
-      .select(col("vec_id"), graft.functions.Quantize.i8(col("embedding")).as("qv"))
-    val q = broadcast(e.where(col("vec_id") === queryVecId).select(col("qv").as("qq")))
-    e.crossJoin(q)
-      .select(col("vec_id"), cosine(col("qv"), col("qq")).as("cos_raw"))
-      .orderBy(desc("cos_raw"), asc("vec_id"))
-      .limit(k)
-      .select(col("vec_id"), round(col("cos_raw"), 6).as("cos_sim"))
-  }
+  def knnExact(spark: SparkSession, dir: String, k: Int = 10,
+      labelFilter: Option[Int] = None, queryVecId: Long = 0L): DataFrame =
+    knnQuantized(spark, dir, Quantizer.Exact, k, queryVecId, labelFilter)
+
+  def knnExactSql(k: Int = 10, labelFilter: Option[Int] = None,
+      queryVecId: Long = 0L): String =
+    knnQuantizedSql(Quantizer.Exact, k, queryVecId, labelFilter)
+
+  def knnI8(spark: SparkSession, dir: String, k: Int = 10, queryVecId: Long = 0L): DataFrame =
+    knnQuantized(spark, dir, Quantizer.I8, k, queryVecId)
 
   def knnI8Sql(k: Int = 10, queryVecId: Long = 0L): String =
-    s"""WITH qe AS (SELECT vec_id, ${graft.functions.Quantize.i8Sql("embedding")} AS qv FROM embeddings),
-       |q AS (SELECT qv AS qq FROM qe WHERE vec_id = $queryVecId)
-       |SELECT vec_id, round(${cosineSql("qv", "qq")}, 6) AS cos_sim
-       |FROM qe, q ORDER BY ${cosineSql("qv", "qq")} DESC, vec_id LIMIT $k""".stripMargin
+    knnQuantizedSql(Quantizer.I8, k, queryVecId)
+
+  def knnF16(spark: SparkSession, dir: String, k: Int = 10, queryVecId: Long = 0L): DataFrame =
+    knnQuantized(spark, dir, Quantizer.F16, k, queryVecId)
+
+  def knnF16Sql(k: Int = 10, queryVecId: Long = 0L): String =
+    knnQuantizedSql(Quantizer.F16, k, queryVecId)
+
+  def knnBf16(spark: SparkSession, dir: String, k: Int = 10, queryVecId: Long = 0L): DataFrame =
+    knnQuantized(spark, dir, Quantizer.Bf16, k, queryVecId)
+
+  def knnBf16Sql(k: Int = 10, queryVecId: Long = 0L): String =
+    knnQuantizedSql(Quantizer.Bf16, k, queryVecId)
+
+  /** The exact ranking a recall entry is measured against: a Spark top-k
+    * and its DuckDB twin.
+    */
+  final case class ExactRank(df: (SparkSession, String, Int) => DataFrame, sql: Int => String)
+
+  object ExactRank {
+    val Cos: ExactRank = ExactRank((s, d, k) => knnExact(s, d, k), k => knnExactSql(k))
+    val L2sq: ExactRank =
+      ExactRank((s, d, k) => MetricQueries.knnL2sq(s, d, k), k => MetricQueries.knnL2sqSql(k))
+  }
+
+  /** recall@k of an approximate top-k against `exact`, in integer basis
+    * points (the reference's recall-per-dtype table, README.md:258-264,
+    * as a measurable driver entry).
+    */
+  def recall(spark: SparkSession, dir: String, approx: DataFrame, exact: ExactRank,
+      k: Int = 10): DataFrame =
+    graft.eval.Eval.recallBp(spark, approx, exact.df(spark, dir, k), "vec_id", k)
+
+  /** DuckDB twin of [[recall]]: `approx` is the approximate top-k's own
+    * oracle SQL; basis points are `hits·10000 div k`, as in
+    * [[graft.eval.Eval.recallBp]].
+    */
+  def recallSql(approx: String, exact: ExactRank, k: Int = 10): String =
+    s"""WITH approx AS (SELECT vec_id FROM ($approx) a),
+       |ex AS (SELECT vec_id FROM (${exact.sql(k)}) x)
+       |SELECT $k AS k, CAST(count(*) * 10000 // $k AS BIGINT) AS recall_bp
+       |FROM approx JOIN ex USING (vec_id)""".stripMargin
+
+  /** recall@10 of the i8 ranking vs the f64 exact ranking. */
+  def recallI8(spark: SparkSession, dir: String): DataFrame =
+    recall(spark, dir, knnI8(spark, dir), ExactRank.Cos)
+
+  def recallI8Sql: String = recallSql(knnI8Sql(), ExactRank.Cos)
+
+  /** recall@10 of the f16 ranking vs the f64 exact ranking — expected at
+    * or near 1.0: 11 significand bits perturb 64-d cosines ~1e-3.
+    */
+  def recallF16(spark: SparkSession, dir: String): DataFrame =
+    recall(spark, dir, knnF16(spark, dir), ExactRank.Cos)
+
+  def recallF16Sql: String = recallSql(knnF16Sql(), ExactRank.Cos)
+
+  /** recall@10 of the bf16 ranking — 8 significand bits sit between
+    * f16's 11 and b1's 1, and so does the recall.
+    */
+  def recallBf16(spark: SparkSession, dir: String): DataFrame =
+    recall(spark, dir, knnBf16(spark, dir), ExactRank.Cos)
+
+  def recallBf16Sql: String = recallSql(knnBf16Sql(), ExactRank.Cos)
 
   /** Dequantized `get` round-trip — the reference reconstructs stored
     * quantized vectors on lookup (`get` dequantizes,
     * /root/reference/include/usearch/index_dense.hpp:781-786, 2191+;
     * round-trip contract tested at
     * /root/reference/python/scripts/test_index.py:87-129): store i8,
-    * reconstruct via [[graft.functions.Quantize.fromI8]] (q/127 → unit
+    * reconstruct via [[Quantize.fromI8]] (q/127 → unit
     * sphere), and report per-vector reconstruction quality vs the
     * normalized original — max elementwise error and the round-trip
     * cosine. Every step is deterministic IEEE double arithmetic shared
@@ -104,8 +209,8 @@ object Similarity {
       ids: Seq[Long] = Seq(1L, 5L, 10L, 99L)): DataFrame = {
     val e = emb(spark, dir).where(col("vec_id").isin(ids: _*))
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .withColumn("qv", graft.functions.Quantize.i8(col("v")))
-      .withColumn("rv", graft.functions.Quantize.fromI8(col("qv")))
+      .withColumn("qv", Quantize.i8(col("v")))
+      .withColumn("rv", Quantize.fromI8(col("qv")))
       // magnitude materialized as a named column: referencing the dot
       // expression inside the zip_with lambda would re-evaluate it per
       // element (the O(dim²) lambda-inlining regression, CLAUDE.md)
@@ -120,7 +225,7 @@ object Similarity {
 
   def getDequantizedSql(ids: Seq[Long] = Seq(1L, 5L, 10L, 99L)): String =
     s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v,
-       |    ${graft.functions.Quantize.i8Sql("embedding")} AS qv,
+       |    ${Quantize.i8Sql("embedding")} AS qv,
        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS mag
        |  FROM embeddings WHERE vec_id IN (${ids.mkString(", ")})),
        |r AS (SELECT vec_id, v, mag, list_transform(qv, q -> q / 127.0) AS rv FROM e)
@@ -128,24 +233,6 @@ object Similarity {
        |  round(list_max(list_transform(range(1, len(v) + 1), i -> abs(rv[i] - v[i] / mag))), 6) + 0.0 AS max_err,
        |  round(${cosineSql("rv", "v")}, 6) + 0.0 AS cos_rt
        |FROM r ORDER BY vec_id""".stripMargin
-
-  /** recall@10 of the i8-quantized ranking vs the f64 exact ranking, in
-    * integer basis points (the reference's recall-per-dtype table,
-    * README.md:258-264, as a measurable driver entry).
-    */
-  def recallI8(spark: SparkSession, dir: String): DataFrame =
-    graft.eval.Eval.recallBp(spark,
-      knnI8(spark, dir), knnExact(spark, dir), "vec_id", 10)
-
-  def recallI8Sql: String =
-    s"""WITH qe AS (SELECT vec_id, ${graft.functions.Quantize.i8Sql("embedding")} AS qv FROM embeddings),
-       |q AS (SELECT qv AS qq FROM qe WHERE vec_id = 0),
-       |i8 AS (SELECT vec_id FROM qe, q ORDER BY ${cosineSql("qv", "qq")} DESC, vec_id LIMIT 10),
-       |qx AS (SELECT embedding AS xq FROM embeddings WHERE vec_id = 0),
-       |ex AS (SELECT vec_id FROM embeddings, qx
-       |       ORDER BY ${cosineSql("embedding", "xq")} DESC, vec_id LIMIT 10)
-       |SELECT 10 AS k, CAST(count(*) * 1000 AS BIGINT) AS recall_bp
-       |FROM i8 JOIN ex USING (vec_id)""".stripMargin
 
   /** Hamming distance over packed-sign-bit words (b1 vectors): Σ per-word
     * popcount(xor) — builtin zip_with/bit_count, integer-exact.
@@ -159,9 +246,9 @@ object Similarity {
     s"list_sum(list_transform(range(1, len($a) + 1), w -> bit_count(xor($a[w], $b[w]))))"
 
   /** b1 binary-quantized exact top-k — the reference's headline b1x8
-    * mode (/root/reference/README.md:267-269; SQL surface
-    * `distance_hamming_binary` /root/reference/sqlite/lib.cpp:287-289):
-    * vectors packed to sign bits ([[graft.functions.Quantize.b1]], 64×
+    * mode (README.md:267-269; SQL surface `distance_hamming_binary`,
+    * sqlite/lib.cpp:287-289):
+    * vectors packed to sign bits ([[Quantize.b1]], 64×
     * smaller than f64), ranked by hamming distance (asc, id asc). All
     * arithmetic is integer → bit-identical cross-engine by construction.
     * Recall vs the f64 exact ranking is gated in QuantizeSpec and
@@ -170,39 +257,28 @@ object Similarity {
   def knnB1(spark: SparkSession, dir: String, k: Int = 10,
       queryVecId: Long = 0L): DataFrame = {
     val e = emb(spark, dir)
-      .select(col("vec_id"), graft.functions.Quantize.b1(col("embedding")).as("bv"))
+      .select(col("vec_id"), Quantize.b1(col("embedding")).as("bv"))
     val q = broadcast(e.where(col("vec_id") === queryVecId).select(col("bv").as("qv")))
-    e.crossJoin(q)
-      .select(col("vec_id"), hammingWords(col("bv"), col("qv")).as("h"))
-      .orderBy(asc("h"), asc("vec_id"))
-      .limit(k)
-      .select(col("vec_id"), col("h").cast("int").as("hamming"))
+    rankTopK(e.crossJoin(q)
+      .select(col("vec_id"), hammingWords(col("bv"), col("qv")).as("raw")), k, ascending = true)
+      .select(col("vec_id"), col("raw").cast("int").as("hamming"))
   }
 
   def knnB1Sql(k: Int = 10, queryVecId: Long = 0L): String =
-    s"""WITH qe AS (SELECT vec_id, ${graft.functions.Quantize.b1Sql("embedding")} AS bv FROM embeddings),
+    s"""WITH qe AS (SELECT vec_id, ${Quantize.b1Sql("embedding")} AS bv FROM embeddings),
        |q AS (SELECT bv AS qv FROM qe WHERE vec_id = $queryVecId)
        |SELECT vec_id, CAST(${hammingWordsSql("bv", "qv")} AS INT) AS hamming
        |FROM qe, q ORDER BY ${hammingWordsSql("bv", "qv")}, vec_id LIMIT $k""".stripMargin
 
-  /** recall@10 of the b1 ranking vs the f64 exact ranking, basis points
-    * (the b1 row of the reference's recall-per-dtype table,
-    * README.md:258-269). 64 sign bits of a 64-d vector keep far less
-    * information than i8 — the number is expected well below i8's.
+  /** recall@10 of the b1 ranking vs the f64 exact ranking (the b1 row
+    * of the reference's recall-per-dtype table, README.md:258-269). 64
+    * sign bits of a 64-d vector keep far less information than i8 — the
+    * number is expected well below i8's.
     */
   def recallB1(spark: SparkSession, dir: String): DataFrame =
-    graft.eval.Eval.recallBp(spark,
-      knnB1(spark, dir), knnExact(spark, dir), "vec_id", 10)
+    recall(spark, dir, knnB1(spark, dir), ExactRank.Cos)
 
-  def recallB1Sql: String =
-    s"""WITH qe AS (SELECT vec_id, ${graft.functions.Quantize.b1Sql("embedding")} AS bv FROM embeddings),
-       |q AS (SELECT bv AS qv FROM qe WHERE vec_id = 0),
-       |b1 AS (SELECT vec_id FROM qe, q ORDER BY ${hammingWordsSql("bv", "qv")}, vec_id LIMIT 10),
-       |qx AS (SELECT embedding AS xq FROM embeddings WHERE vec_id = 0),
-       |ex AS (SELECT vec_id FROM embeddings, qx
-       |       ORDER BY ${cosineSql("embedding", "xq")} DESC, vec_id LIMIT 10)
-       |SELECT 10 AS k, CAST(count(*) * 1000 AS BIGINT) AS recall_bp
-       |FROM b1 JOIN ex USING (vec_id)""".stripMargin
+  def recallB1Sql: String = recallSql(knnB1Sql(), ExactRank.Cos)
 
   /** Self-recall through the b1 binary quantization — the reference's
     * `self_recall` quality probe (/root/reference/python/usearch/eval.py:97-112:
@@ -224,7 +300,7 @@ object Similarity {
   def selfRecallB1(spark: SparkSession, dir: String,
       sampleMod: Long = 50L): DataFrame = {
     val e = emb(spark, dir)
-      .select(col("vec_id"), graft.functions.Quantize.b1(col("embedding")).as("bv"))
+      .select(col("vec_id"), Quantize.b1(col("embedding")).as("bv"))
     val q = broadcast(e.where(col("vec_id") % sampleMod === 0)
       .select(col("vec_id").as("query_id"), col("bv").as("qv")))
     e.crossJoin(q)
@@ -239,7 +315,7 @@ object Similarity {
   }
 
   def selfRecallB1Sql(sampleMod: Long = 50L): String =
-    s"""WITH qe AS (SELECT vec_id, ${graft.functions.Quantize.b1Sql("embedding")} AS bv FROM embeddings),
+    s"""WITH qe AS (SELECT vec_id, ${Quantize.b1Sql("embedding")} AS bv FROM embeddings),
        |q AS (SELECT vec_id AS query_id, bv AS qv FROM qe WHERE vec_id % $sampleMod = 0),
        |s AS (SELECT q.query_id, e.vec_id,
        |        row_number() OVER (PARTITION BY q.query_id
@@ -249,100 +325,13 @@ object Similarity {
        |  CAST(CASE WHEN vec_id = query_id THEN 1 ELSE 0 END AS BIGINT) AS self_hit
        |FROM s WHERE rn = 1 ORDER BY query_id""".stripMargin
 
-  /** f16 half-precision exact top-k — the reference's f16 dtype
-    * (/root/reference/include/usearch/index_plugins.hpp:299-352; recall
-    * table README.md:249-269). Vectors are rounded to IEEE binary16 via
-    * [[graft.functions.Quantize.f16]] (pure-double-arithmetic rounding,
-    * so the DuckDB twin is bit-identical), then scored with the same
-    * double cosine as the exact path — halves are exact doubles, so the
-    * quantized scores stay cross-engine exact.
-    */
-  def knnF16(spark: SparkSession, dir: String, k: Int = 10,
-      queryVecId: Long = 0L): DataFrame = {
-    val e = emb(spark, dir)
-      .select(col("vec_id"), graft.functions.Quantize.f16(col("embedding")).as("hv"))
-    val q = broadcast(e.where(col("vec_id") === queryVecId).select(col("hv").as("hq")))
-    e.crossJoin(q)
-      .select(col("vec_id"), cosine(col("hv"), col("hq")).as("cos_raw"))
-      .orderBy(desc("cos_raw"), asc("vec_id"))
-      .limit(k)
-      .select(col("vec_id"), round(col("cos_raw"), 6).as("cos_sim"))
-  }
-
-  def knnF16Sql(k: Int = 10, queryVecId: Long = 0L): String =
-    s"""WITH qe AS (SELECT vec_id, ${graft.functions.Quantize.f16Sql("embedding")} AS hv FROM embeddings),
-       |q AS (SELECT hv AS hq FROM qe WHERE vec_id = $queryVecId)
-       |SELECT vec_id, round(${cosineSql("hv", "hq")}, 6) AS cos_sim
-       |FROM qe, q ORDER BY ${cosineSql("hv", "hq")} DESC, vec_id LIMIT $k""".stripMargin
-
-  /** recall@10 of the f16 ranking vs the f64 exact ranking, basis points
-    * (the f16 row of the reference's recall-per-dtype table — expected at
-    * or near 1.0: 11 significand bits perturb 64-d cosines ~1e-3).
-    */
-  def recallF16(spark: SparkSession, dir: String): DataFrame =
-    graft.eval.Eval.recallBp(spark,
-      knnF16(spark, dir), knnExact(spark, dir), "vec_id", 10)
-
-  def recallF16Sql: String =
-    s"""WITH qe AS (SELECT vec_id, ${graft.functions.Quantize.f16Sql("embedding")} AS hv FROM embeddings),
-       |q AS (SELECT hv AS hq FROM qe WHERE vec_id = 0),
-       |h16 AS (SELECT vec_id FROM qe, q ORDER BY ${cosineSql("hv", "hq")} DESC, vec_id LIMIT 10),
-       |qx AS (SELECT embedding AS xq FROM embeddings WHERE vec_id = 0),
-       |ex AS (SELECT vec_id FROM embeddings, qx
-       |       ORDER BY ${cosineSql("embedding", "xq")} DESC, vec_id LIMIT 10)
-       |SELECT 10 AS k, CAST(count(*) * 1000 AS BIGINT) AS recall_bp
-       |FROM h16 JOIN ex USING (vec_id)""".stripMargin
-
-  /** bf16 brain-float exact top-k — the reference's bf16 dtype
-    * (/root/reference/BENCHMARKS.md:46-49; `bf16_bits_t`
-    * index_plugins.hpp:91-92). Same construction as [[knnF16]] with
-    * [[graft.functions.Quantize.bf16]]'s 8-significand-bit rounding —
-    * bf16 values are exact doubles, so the quantized cosine stays
-    * cross-engine exact.
-    */
-  def knnBf16(spark: SparkSession, dir: String, k: Int = 10,
-      queryVecId: Long = 0L): DataFrame = {
-    val e = emb(spark, dir)
-      .select(col("vec_id"), graft.functions.Quantize.bf16(col("embedding")).as("bv"))
-    val q = broadcast(e.where(col("vec_id") === queryVecId).select(col("bv").as("bq")))
-    e.crossJoin(q)
-      .select(col("vec_id"), cosine(col("bv"), col("bq")).as("cos_raw"))
-      .orderBy(desc("cos_raw"), asc("vec_id"))
-      .limit(k)
-      .select(col("vec_id"), round(col("cos_raw"), 6).as("cos_sim"))
-  }
-
-  def knnBf16Sql(k: Int = 10, queryVecId: Long = 0L): String =
-    s"""WITH qe AS (SELECT vec_id, ${graft.functions.Quantize.bf16Sql("embedding")} AS bv FROM embeddings),
-       |q AS (SELECT bv AS bq FROM qe WHERE vec_id = $queryVecId)
-       |SELECT vec_id, round(${cosineSql("bv", "bq")}, 6) AS cos_sim
-       |FROM qe, q ORDER BY ${cosineSql("bv", "bq")} DESC, vec_id LIMIT $k""".stripMargin
-
-  /** recall@10 of the bf16 ranking vs the f64 exact ranking, basis points
-    * (the bf16 row of the reference's per-dtype table — 8 significand
-    * bits sit between f16's 11 and b1's 1, and so does the recall).
-    */
-  def recallBf16(spark: SparkSession, dir: String): DataFrame =
-    graft.eval.Eval.recallBp(spark,
-      knnBf16(spark, dir), knnExact(spark, dir), "vec_id", 10)
-
-  def recallBf16Sql: String =
-    s"""WITH qe AS (SELECT vec_id, ${graft.functions.Quantize.bf16Sql("embedding")} AS bv FROM embeddings),
-       |q AS (SELECT bv AS bq FROM qe WHERE vec_id = 0),
-       |h AS (SELECT vec_id FROM qe, q ORDER BY ${cosineSql("bv", "bq")} DESC, vec_id LIMIT 10),
-       |qx AS (SELECT embedding AS xq FROM embeddings WHERE vec_id = 0),
-       |ex AS (SELECT vec_id FROM embeddings, qx
-       |       ORDER BY ${cosineSql("embedding", "xq")} DESC, vec_id LIMIT 10)
-       |SELECT 10 AS k, CAST(count(*) * 1000 AS BIGINT) AS recall_bp
-       |FROM h JOIN ex USING (vec_id)""".stripMargin
-
   /** Two-stage coarse-then-refine search: b1 Hamming shortlist (64×
     * smaller vectors, integer arithmetic) re-ranked with the exact f64
     * cosine — the standard recipe for recovering the b1 recall cliff the
     * reference documents (README.md:254-269: the same index down-casts to
     * `b1x8_t` and up-casts back; its search contexts keep dedicated
     * refine shortlists, `top_for_refine` / `computed_distances_in_refines`,
-    * /root/reference/include/usearch/index.hpp:2204-2211).
+    * index.hpp:2204-2211).
     *
     * Scale shape: ONE scan computes the integer Hamming shortlist
     * (TakeOrderedAndProject, k·factor rows survive), and only those
@@ -355,24 +344,18 @@ object Similarity {
   def knnB1Refine(spark: SparkSession, dir: String, k: Int = 10,
       factor: Int = 8, queryVecId: Long = 0L): DataFrame = {
     val e = emb(spark, dir)
-      .select(col("vec_id"), col("embedding"),
-        graft.functions.Quantize.b1(col("embedding")).as("bv"))
+      .select(col("vec_id"), col("embedding"), Quantize.b1(col("embedding")).as("bv"))
     val q = broadcast(e.where(col("vec_id") === queryVecId)
       .select(col("bv").as("qb"), col("embedding").as("qv")))
-    val shortlist = e.crossJoin(q)
+    val shortlist = rankTopK(e.crossJoin(q)
       .select(col("vec_id"), col("embedding"), col("qv"),
-        hammingWords(col("bv"), col("qb")).as("h"))
-      .orderBy(asc("h"), asc("vec_id"))
-      .limit(k * factor)
-    shortlist
-      .select(col("vec_id"), cosine(col("embedding"), col("qv")).as("cos_raw"))
-      .orderBy(desc("cos_raw"), asc("vec_id"))
-      .limit(k)
-      .select(col("vec_id"), round(col("cos_raw"), 6).as("cos_sim"))
+        hammingWords(col("bv"), col("qb")).as("raw")), k * factor, ascending = true)
+    emitTopK(shortlist
+      .select(col("vec_id"), cosine(col("embedding"), col("qv")).as("raw")), k, "cos_sim")
   }
 
   def knnB1RefineSql(k: Int = 10, factor: Int = 8, queryVecId: Long = 0L): String =
-    s"""WITH qe AS (SELECT vec_id, embedding, ${graft.functions.Quantize.b1Sql("embedding")} AS bv FROM embeddings),
+    s"""WITH qe AS (SELECT vec_id, embedding, ${Quantize.b1Sql("embedding")} AS bv FROM embeddings),
        |q AS (SELECT bv AS qb, embedding AS qv FROM qe WHERE vec_id = $queryVecId),
        |cand AS (SELECT e.vec_id, e.embedding, q.qv FROM qe e, q
        |         ORDER BY ${hammingWordsSql("e.bv", "q.qb")}, e.vec_id LIMIT ${k * factor})
@@ -386,21 +369,9 @@ object Similarity {
     * recall = |shortlist ∩ exact-top-10| when the shortlist covers it).
     */
   def recallB1Refine(spark: SparkSession, dir: String): DataFrame =
-    graft.eval.Eval.recallBp(spark,
-      knnB1Refine(spark, dir), knnExact(spark, dir), "vec_id", 10)
+    recall(spark, dir, knnB1Refine(spark, dir), ExactRank.Cos)
 
-  def recallB1RefineSql: String =
-    s"""WITH qe AS (SELECT vec_id, embedding, ${graft.functions.Quantize.b1Sql("embedding")} AS bv FROM embeddings),
-       |q AS (SELECT bv AS qb, embedding AS qv FROM qe WHERE vec_id = 0),
-       |cand AS (SELECT e.vec_id, e.embedding, q.qv FROM qe e, q
-       |         ORDER BY ${hammingWordsSql("e.bv", "q.qb")}, e.vec_id LIMIT 80),
-       |rf AS (SELECT vec_id FROM cand
-       |       ORDER BY ${cosineSql("embedding", "qv")} DESC, vec_id LIMIT 10),
-       |qx AS (SELECT embedding AS xq FROM embeddings WHERE vec_id = 0),
-       |ex AS (SELECT vec_id FROM embeddings, qx
-       |       ORDER BY ${cosineSql("embedding", "xq")} DESC, vec_id LIMIT 10)
-       |SELECT 10 AS k, CAST(count(*) * 1000 AS BIGINT) AS recall_bp
-       |FROM rf JOIN ex USING (vec_id)""".stripMargin
+  def recallB1RefineSql: String = recallSql(knnB1RefineSql(), ExactRank.Cos)
 
   /** NDCG@10 of the b1 ranking vs the f64 exact ranking, in integer
     * basis points — the rank-quality half of the per-dtype table (recall
@@ -424,14 +395,9 @@ object Similarity {
   def ndcgB1Sql: String = {
     val disc = (1 to 10)
       .map(r => s"($r, ${graft.eval.Eval.DiscountMicros(r - 1)})").mkString(", ")
-    s"""WITH qe AS (SELECT vec_id, ${graft.functions.Quantize.b1Sql("embedding")} AS bv FROM embeddings),
-       |q AS (SELECT bv AS qv FROM qe WHERE vec_id = 0),
-       |b1 AS (SELECT vec_id, row_number() OVER (ORDER BY h, vec_id) AS rnk
-       |       FROM (SELECT vec_id, ${hammingWordsSql("bv", "qv")} AS h
-       |             FROM qe, q ORDER BY h, vec_id LIMIT 10)),
-       |qx AS (SELECT embedding AS xq FROM embeddings WHERE vec_id = 0),
-       |ex AS (SELECT vec_id FROM embeddings, qx
-       |       ORDER BY ${cosineSql("embedding", "xq")} DESC, vec_id LIMIT 10),
+    s"""WITH b1 AS (SELECT vec_id, row_number() OVER (ORDER BY hamming, vec_id) AS rnk
+       |       FROM (${knnB1Sql()}) b),
+       |ex AS (SELECT vec_id FROM (${knnExactSql()}) x),
        |disc(rnk, d) AS (VALUES $disc),
        |hits AS (SELECT b1.rnk FROM b1 JOIN ex USING (vec_id)),
        |dv AS (SELECT CAST(coalesce(sum(d.d), 0) AS BIGINT) AS dcg
@@ -447,26 +413,31 @@ object Similarity {
 
   /** Batched multi-query exact kNN — the embedding-side `searchMany`
     * (the reference's `exact_search_t` scores MANY queries in one pass,
-    * /root/reference/include/usearch/index_plugins.hpp:2071-2164): one
-    * scan of the vectors against the broadcast query set, grouped
-    * bounded top-k ([[graft.functions.TopKAgg]], map-side partial agg —
-    * shuffle is O(queries · partitions · k), never the scored rows).
+    * index_plugins.hpp:2071-2164): one scan of the vectors against the
+    * broadcast query set, then [[emitBatchTopK]].
     */
   def knnExactMany(spark: SparkSession, dir: String,
-      nQueries: Int = 5, k: Int = 10): DataFrame = {
-    val e = emb(spark, dir)
-    val q = broadcast(e.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv")))
-    e.crossJoin(q)
-      .select(col("query_id"), col("vec_id"),
-        cosine(col("embedding"), col("qv")).as("cos_raw"))
-      .groupBy(col("query_id"))
-      .agg(graft.functions.TopKAgg.greatest(col("cos_raw"), col("vec_id"), k).as("hits"))
+      nQueries: Int = 5, k: Int = 10): DataFrame =
+    emitBatchTopK(emb(spark, dir).crossJoin(broadcast(querySet(spark, dir, nQueries)))
+      .select(col("query_id"), col("vec_id"), cosine(col("embedding"), col("qv")).as("raw")), k)
+
+  /** The first `nQueries` vectors as a query set `(query_id, qv)`. */
+  private def querySet(spark: SparkSession, dir: String, nQueries: Int): DataFrame =
+    emb(spark, dir).where(col("vec_id") < nQueries)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+
+  /** The batch twin of [[emitTopK]]: a bounded per-query cosine top-k
+    * ([[TopKAgg]], map-side partial — the shuffle carries
+    * O(queries · partitions · k) buffers, never the scored rows),
+    * emitted as (query_id, rank, vec_id, round(raw, 6) AS cos_sim).
+    */
+  private def emitBatchTopK(scored: DataFrame, k: Int): DataFrame =
+    scored.groupBy(col("query_id"))
+      .agg(TopKAgg.greatest(col("raw"), col("vec_id"), k).as("hits"))
       .select(col("query_id"), posexplode(col("hits")).as(Seq("rnk0", "h")))
       .select(col("query_id"), (col("rnk0") + 1).as("rank"),
         col("h.id").as("vec_id"), round(col("h.score"), 6).as("cos_sim"))
       .orderBy(col("query_id"), col("rank"))
-  }
 
   def knnExactManySql(nQueries: Int = 5, k: Int = 10): String =
     s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < $nQueries),
@@ -487,12 +458,9 @@ object Similarity {
     val e = emb(spark, dir)
     val q = broadcast(e.where(col("vec_id") === queryVecId)
       .select(col("embedding").as("q_embedding")))
-    e.crossJoin(q)
-      .select(col("vec_id"),
-        metric(col("embedding"), col("q_embedding")).as("dist_raw"))
-      .orderBy(asc("dist_raw"), asc("vec_id"))
-      .limit(k)
-      .select(col("vec_id"), (round(col("dist_raw"), 6) + lit(0.0)).as("dist"))
+    emitTopK(e.crossJoin(q)
+      .select(col("vec_id"), metric(col("embedding"), col("q_embedding")).as("raw")),
+      k, "dist", ascending = true)
   }
 
   /** Oracle for [[knnWithMetric]] with the built-in cos metric. */
@@ -565,12 +533,11 @@ object Similarity {
     * are k-means-partitioned into `nlist` cells; a query scores ONLY the
     * `nprobe` nearest cells, touching nprobe/nlist of the data. The exact
     * brute-force path ([[knnExact]]) is the recall oracle (IvfSpec).
-    */
-  /** Persisted IVF index handle: centroids + cell assignments served from
-    * Parquet. Built ONCE per (data dir, nlist) and reused — the reference
+    *
+    * The persisted handle: centroids + cell assignments served from
+    * Parquet, built ONCE per (data dir, nlist) and reused — the reference
     * builds its serving structure at add-time and queries only probe it
-    * (/root/reference/include/usearch/index.hpp:2-4); round 1 re-ran
-    * k-means inside every query.
+    * (index.hpp:2-4).
     */
   final case class IvfIndex(centroids: DataFrame, assignments: DataFrame)
 
@@ -579,14 +546,26 @@ object Similarity {
     */
   final val IvfKmeansIters = 2
 
-  def ivfIndexFor(spark: SparkSession, dir: String, nlist: Int = 8,
-      maxId: Option[Long] = None): IvfIndex = {
+  /** Root of a build artifact persisted under `java.io.tmpdir`, named by
+    * `name` from the data dir's key: `build(root)` runs only while the
+    * root's `_committed` marker is missing, so the artifact is fitted once
+    * per data dir and every later call reads Parquet.
+    */
+  private def persistedRoot(dir: String, name: String => String)(build: String => Unit): String = {
     import java.nio.file.{Files, Paths}
-    val key = dir.replaceAll("[^a-zA-Z0-9.]", "_")
-    val suffix = maxId.map(m => s"-lt$m").getOrElse("")
-    val root = s"${sys.props("java.io.tmpdir")}/graft-ivf-$key-n$nlist$suffix"
+    val root = s"${sys.props("java.io.tmpdir")}/${name(dir.replaceAll("[^a-zA-Z0-9.]", "_"))}"
     val marker = Paths.get(root, "_committed")
     if (!Files.exists(marker)) {
+      build(root)
+      Files.writeString(marker, "ok")
+    }
+    root
+  }
+
+  def ivfIndexFor(spark: SparkSession, dir: String, nlist: Int = 8,
+      maxId: Option[Long] = None): IvfIndex = {
+    val suffix = maxId.map(m => s"-lt$m").getOrElse("")
+    val root = persistedRoot(dir, key => s"graft-ivf-$key-n$nlist$suffix") { root =>
       val pts0 = emb(spark, dir).select(col("vec_id").as("id"), col("embedding").as("vec"))
       val pts = maxId.map(m => pts0.where(col("id") < m)).getOrElse(pts0)
       val km = graft.index.KMeans.fit(spark, pts, k = nlist,
@@ -601,7 +580,6 @@ object Similarity {
       // files (partition pruning), the IVF point at scale
       try km.assignments.write.mode("overwrite").partitionBy("cid").parquet(s"$root/assignments")
       finally fc.get()
-      Files.writeString(marker, "ok")
       // everything is on disk now — drop the fit's result caches
       km.centroids.unpersist()
       km.assignments.unpersist()
@@ -617,45 +595,32 @@ object Similarity {
     * semantics as the engine's filtered WAND. At `nprobe = nlist` the
     * filtered IVF result must equal the filtered brute-force oracle.
     */
-  def ivfKnn(
-      spark: SparkSession,
-      dir: String,
-      k: Int = 10,
-      nlist: Int = 16,
-      nprobe: Int = 4,
-      queryVecId: Long = 0L,
-      labelFilter: Option[Int] = None): DataFrame = {
-    val ivf = ivfIndexFor(spark, dir, nlist)
+  def ivfKnn(spark: SparkSession, dir: String, k: Int = 10, nlist: Int = 16,
+      nprobe: Int = 4, queryVecId: Long = 0L, labelFilter: Option[Int] = None): DataFrame = {
+    val probed = probeCells(spark, dir, ivfIndexFor(spark, dir, nlist), queryVecId, nprobe)
+    knnQuantized(spark, dir, Quantizer.Exact, k, queryVecId, labelFilter,
+      candidates = Some(probed.select(col("id").as("vec_id"))))
+  }
 
-    // nprobe cells nearest to the query vector (nlist rows → driver)
+  /** Ids of the vectors in the `nprobe` IVF cells nearest the query:
+    * cells ranked by cosine distance to the centroid (cid asc on ties)
+    * on the driver, over the nlist centroid rows; the assignments read
+    * partition-prunes to the probed cells.
+    */
+  private def probeCells(spark: SparkSession, dir: String, ivf: IvfIndex,
+      queryVecId: Long, nprobe: Int): DataFrame = {
+    import graft.functions.DotProduct.{dot => dotD}
     val qVec = emb(spark, dir).where(col("vec_id") === queryVecId)
       .select(col("embedding").cast("array<double>")).head().getSeq[Double](0).toArray
     val probed = ivf.centroids.collect()
       .map { r =>
         val c = r.getSeq[Double](1).toArray
-        val d = 1.0 - graft.functions.DotProduct.dot(qVec, c) /
-          (math.sqrt(graft.functions.DotProduct.dot(qVec, qVec)) *
-            math.sqrt(graft.functions.DotProduct.dot(c, c)))
-        (r.getLong(0), d)
+        (r.getLong(0), 1.0 - dotD(qVec, c) / (math.sqrt(dotD(qVec, qVec)) * math.sqrt(dotD(c, c))))
       }
       .sortBy { case (cid, d) => (d, cid) }
       .take(nprobe)
       .map(_._1)
-
-    val q = broadcast(emb(spark, dir).where(col("vec_id") === queryVecId)
-      .select(col("embedding").as("q_embedding")))
-    val base = labelFilter
-      .map(l => emb(spark, dir).where(col("label") === l))
-      .getOrElse(emb(spark, dir))
-    ivf.assignments
-      .where(col("cid").isin(probed.toSeq: _*))
-      .select(col("id").as("vec_id"))
-      .join(base, "vec_id")
-      .crossJoin(q)
-      .select(col("vec_id"), cosine(col("embedding"), col("q_embedding")).as("cos_raw"))
-      .orderBy(desc("cos_raw"), asc("vec_id"))
-      .limit(k)
-      .select(col("vec_id"), round(col("cos_raw"), 6).as("cos_sim"))
+    ivf.assignments.where(col("cid").isin(probed.toSeq: _*)).select(col("id"))
   }
 
   /** Batched IVF ANN: every query probes its own nprobe nearest cells,
@@ -674,39 +639,31 @@ object Similarity {
     * is probed, so the full batched machinery must reproduce the
     * brute-force batch oracle exactly.
     */
-  def ivfKnnMany(
-      spark: SparkSession,
-      dir: String,
-      nQueries: Int = 5,
-      k: Int = 10,
-      nlist: Int = 8,
-      nprobe: Int = 8): DataFrame = {
+  def ivfKnnMany(spark: SparkSession, dir: String, nQueries: Int = 5, k: Int = 10,
+      nlist: Int = 8, nprobe: Int = 8): DataFrame = {
     val ivf = ivfIndexFor(spark, dir, nlist)
-    val qSet = emb(spark, dir).where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val probeDf = broadcast(
-      qSet.crossJoin(broadcast(ivf.centroids
-          .select(col("cid"), col("cvec").as("cv"))))
-        .select(col("query_id"), col("cid"), cosine(col("qv"), col("cv")).as("c_cos"))
-        .groupBy(col("query_id"))
-        .agg(graft.functions.TopKAgg.greatest(col("c_cos"), col("cid"), nprobe).as("cells"))
-        .select(col("query_id"), explode(col("cells.id")).as("cid")))
-    val q = broadcast(emb(spark, dir).where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv")))
-    ivf.assignments
-      .join(probeDf, "cid")
+    val qSet = querySet(spark, dir, nQueries)
+    emitBatchTopK(ivf.assignments
+      .join(cellRanks(qSet, ivf, nprobe), "cid")
       .select(col("query_id"), col("id").as("vec_id"))
       .join(emb(spark, dir), "vec_id")
-      .join(q, "query_id")
-      .select(col("query_id"), col("vec_id"),
-        cosine(col("embedding"), col("qv")).as("cos_raw"))
-      .groupBy(col("query_id"))
-      .agg(graft.functions.TopKAgg.greatest(col("cos_raw"), col("vec_id"), k).as("hits"))
-      .select(col("query_id"), posexplode(col("hits")).as(Seq("rnk0", "h")))
-      .select(col("query_id"), (col("rnk0") + 1).as("rank"),
-        col("h.id").as("vec_id"), round(col("h.score"), 6).as("cos_sim"))
-      .orderBy(col("query_id"), col("rank"))
+      .join(broadcast(qSet), "query_id")
+      .select(col("query_id"), col("vec_id"), cosine(col("embedding"), col("qv")).as("raw")), k)
   }
+
+  /** Each query's `n` nearest IVF cells with their 1-based `cell_rank` —
+    * the distributed twin of [[probeCells]]: queries × broadcast(nlist
+    * centroids) → a bounded map-side-partial TopKAgg per query, broadcast
+    * as the probe table.
+    */
+  private def cellRanks(qSet: DataFrame, ivf: IvfIndex, n: Int): DataFrame =
+    broadcast(
+      qSet.crossJoin(broadcast(ivf.centroids.select(col("cid"), col("cvec").as("cv"))))
+        .select(col("query_id"), col("cid"), cosine(col("qv"), col("cv")).as("c_cos"))
+        .groupBy(col("query_id"))
+        .agg(TopKAgg.greatest(col("c_cos"), col("cid"), n).as("cells"))
+        .select(col("query_id"), posexplode(col("cells")).as(Seq("crnk0", "c")))
+        .select(col("query_id"), col("c.id").as("cid"), (col("crnk0") + 1).as("cell_rank")))
 
   final val RecallCurveNlist = 64
   final val RecallCurveNprobes: Seq[Int] = Seq(1, 2, 4, 8, 16, 32, 64)
@@ -715,7 +672,7 @@ object Similarity {
 
   /** Recall-vs-nprobe curve for the IVF index at a non-trivial nlist —
     * the per-config recall table the reference publishes for its
-    * quantization/connectivity sweeps (/root/reference/BENCHMARKS.md:28-40).
+    * quantization/connectivity sweeps (BENCHMARKS.md:28-40).
     * One pass scores every (query, candidate, cell_rank) triple; each
     * nprobe's top-k is a bounded map-side partial over the `cell_rank <=
     * nprobe` slice, so the whole curve is ONE plan whose size is
@@ -730,18 +687,10 @@ object Similarity {
       nQueries: Int = RecallCurveNQueries, k: Int = RecallCurveK,
       nlist: Int = RecallCurveNlist): DataFrame = {
     val ivf = ivfIndexFor(spark, dir, nlist)
-    val qSet = emb(spark, dir).where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    // every cell ranked per query (bounded: nlist rows/query), map-side partial
-    val cellRank = broadcast(
-      qSet.crossJoin(broadcast(ivf.centroids.select(col("cid"), col("cvec").as("cv"))))
-        .select(col("query_id"), col("cid"), cosine(col("qv"), col("cv")).as("c_cos"))
-        .groupBy(col("query_id"))
-        .agg(graft.functions.TopKAgg.greatest(col("c_cos"), col("cid"), nlist).as("cells"))
-        .select(col("query_id"), posexplode(col("cells")).as(Seq("crnk0", "c")))
-        .select(col("query_id"), col("c.id").as("cid"), (col("crnk0") + 1).as("cell_rank")))
+    val qSet = querySet(spark, dir, nQueries)
+    // every cell ranked per query (bounded: nlist rows/query)
     val scored = ivf.assignments
-      .join(cellRank, "cid")
+      .join(cellRanks(qSet, ivf, nlist), "cid")
       .select(col("query_id"), col("id").as("vec_id"), col("cell_rank"))
       .join(emb(spark, dir), "vec_id")
       .join(broadcast(qSet), "query_id")
@@ -752,12 +701,12 @@ object Similarity {
       .select(col("query_id"), col("vec_id"), col("cell_rank"), col("cos_raw"), probes)
       .where(col("cell_rank") <= col("nprobe"))
       .groupBy(col("nprobe"), col("query_id"))
-      .agg(graft.functions.TopKAgg.greatest(col("cos_raw"), col("vec_id"), k).as("hits"))
+      .agg(TopKAgg.greatest(col("cos_raw"), col("vec_id"), k).as("hits"))
       .select(col("nprobe"), col("query_id"), explode(col("hits.id")).as("vec_id"))
     val exact = qSet.crossJoin(emb(spark, dir))
       .select(col("query_id"), col("vec_id"), cosine(col("embedding"), col("qv")).as("cos_raw"))
       .groupBy(col("query_id"))
-      .agg(graft.functions.TopKAgg.greatest(col("cos_raw"), col("vec_id"), k).as("hits"))
+      .agg(TopKAgg.greatest(col("cos_raw"), col("vec_id"), k).as("hits"))
       .select(col("query_id"), explode(col("hits.id")).as("vec_id"))
     val hits = ivfTopk.join(exact, Seq("query_id", "vec_id"))
       .groupBy(col("nprobe")).agg(count(lit(1)).as("h"))
@@ -885,15 +834,8 @@ object Similarity {
     val ivf = ivfIndexFor(spark, dir, nlist, maxId = Some(splitId))
     val combined = ivf.assignments.select(col("id"), col("cid"))
       .union(ivfAddAssignments(spark, dir, nlist, splitId))
-    val q = broadcast(emb(spark, dir).where(col("vec_id") === queryVecId)
-      .select(col("embedding").as("q_embedding")))
-    combined.select(col("id").as("vec_id"))
-      .join(emb(spark, dir), "vec_id")
-      .crossJoin(q)
-      .select(col("vec_id"), cosine(col("embedding"), col("q_embedding")).as("cos_raw"))
-      .orderBy(desc("cos_raw"), asc("vec_id"))
-      .limit(k)
-      .select(col("vec_id"), round(col("cos_raw"), 6).as("cos_sim"))
+    knnQuantized(spark, dir, Quantizer.Exact, k, queryVecId,
+      candidates = Some(combined.select(col("id").as("vec_id"))))
   }
 
   final val KmeansK = 8
@@ -990,13 +932,9 @@ object Similarity {
 
   private def pqFits(spark: SparkSession, dir: String)
       : (PqIndex, PqIndex, DataFrame) = {
-    import java.nio.file.{Files, Paths}
     val e = emb(spark, dir)
       .select(col("vec_id").as("id"), col("embedding").cast("array<double>").as("v"))
-    val key = dir.replaceAll("[^a-zA-Z0-9.]", "_")
-    val root = s"${sys.props("java.io.tmpdir")}/graft-pq-$key-k$PqK-i$PqIters"
-    val marker = Paths.get(root, "_committed")
-    if (!Files.exists(marker)) {
+    val root = persistedRoot(dir, key => s"graft-pq-$key-k$PqK-i$PqIters") { root =>
       val d = e.select(size(col("v")).as("d")).head().getInt(0)
       require(d == 2 * PqSubDim,
         s"PQ geometry expects dim ${2 * PqSubDim}, got $d — retune PqSubDim")
@@ -1011,7 +949,6 @@ object Similarity {
         fit.centroids.unpersist()
         fit.assignments.unpersist()
       }
-      Files.writeString(marker, "ok")
     }
     def side(sub: Int) = PqIndex(
       spark.read.parquet(s"$root/centroids$sub"),
@@ -1019,93 +956,107 @@ object Similarity {
     (side(1), side(2), e)
   }
 
-  /** PRODUCT-QUANTIZATION ADC top-k (the classic vector-compression
-    * family next to the scalar i8/f16/bf16/b1 dtypes; the reference's
-    * quantized-storage direction, /root/reference/README.md:258-269):
+  /** PRODUCT-QUANTIZATION ADC distance scan (the classic
+    * vector-compression family next to the scalar i8/f16/bf16/b1 dtypes;
+    * the reference's quantized-storage direction, README.md:258-269):
     * each vector is stored as TWO small codebook ids (k-means per
     * subspace, [[graft.index.KMeans]] — deterministic by construction),
     * and query distance is the asymmetric-distance sum
     * d(q₁, c₁[code₁]) + d(q₂, c₂[code₂]) of per-subspace
     * query-to-centroid l2sq — a lookup-table add, never a full-vector
-    * scan.
+    * scan. `candidates` (ids) restricts the scan, e.g. to an IVF probe's
+    * cells; None scores every coded vector.
     *
     * Determinism contract: the codebooks are the engine's own pinned
     * k-means (oracle replays them CTE-for-CTE); each subspace distance
     * uses the kmeans dot-expansion association
     * `(q·q − 2·q·c) + c·c`; the two subspace distances add as ONE IEEE
-    * op; ranking is (adc asc, id asc) on raw doubles, rounded at 6 dp
-    * with −0.0 normalized for output.
+    * op. Returns (vec_id, raw).
     *
-    * Scale shape: two bounded k-means fits (broadcast centroids), the
-    * ADC table is 2·[[PqK]] rows (broadcast), scoring is two broadcast
-    * joins + one add per vector — no full-dim arithmetic per candidate
-    * at query time, which is the entire point of PQ at 100 TB.
-    *
-    * Returns DataFrame(vec_id, adc_dist) — top-k.
+    * Scale shape: the ADC table is 2·[[PqK]] rows (broadcast), scoring is
+    * two broadcast joins + one add per vector — no full-dim arithmetic
+    * per candidate at query time, which is the entire point of PQ at
+    * 100 TB.
     */
-  def pqKnn(spark: SparkSession, dir: String, k: Int = 10,
-      queryVecId: Long = 0L): DataFrame = {
+  private def adcScan(spark: SparkSession, dir: String, queryVecId: Long,
+      candidates: Option[DataFrame]): DataFrame = {
     val (fit1, fit2, e) = pqFits(spark, dir)
     val q = e.where(col("id") === queryVecId)
-    def adcFor(cents: DataFrame, from: Int): DataFrame =
-      cents.crossJoin(broadcast(q.select(slice(col("v"), from, PqSubDim).as("qv"))))
-        .select(col("cid"),
+    def adcFor(fit: PqIndex, from: Int, code: String, dist: String): DataFrame =
+      broadcast(fit.centroids
+        .crossJoin(broadcast(q.select(slice(col("v"), from, PqSubDim).as("qv"))))
+        .select(col("cid").as(code),
           dot(col("qv"), col("qv"))
             .minus(lit(2.0) * dot(col("qv"), col("cvec")))
-            .plus(dot(col("cvec"), col("cvec"))).as("dsub"))
-    val adc1 = adcFor(fit1.centroids, 1)
-      .withColumnRenamed("cid", "c1").withColumnRenamed("dsub", "d1")
-    val adc2 = adcFor(fit2.centroids, PqSubDim + 1)
-      .withColumnRenamed("cid", "c2").withColumnRenamed("dsub", "d2")
-    fit1.assignments.select(col("id"), col("cid").as("c1"))
+            .plus(dot(col("cvec"), col("cvec"))).as(dist)))
+    val codes1 = fit1.assignments.select(col("id"), col("cid").as("c1"))
+    candidates.fold(codes1)(_.join(codes1, Seq("id")))
       .join(fit2.assignments.select(col("id"), col("cid").as("c2")), Seq("id"))
-      .join(broadcast(adc1), Seq("c1"))
-      .join(broadcast(adc2), Seq("c2"))
-      .select(col("id"), (col("d1") + col("d2")).as("adc"))
-      .orderBy(asc("adc"), asc("id"))
-      .limit(k)
-      .select(col("id").as("vec_id"),
-        (round(col("adc"), 6) + lit(0.0)).as("adc_dist"))
+      .join(adcFor(fit1, 1, "c1", "d1"), Seq("c1"))
+      .join(adcFor(fit2, PqSubDim + 1, "c2", "d2"), Seq("c2"))
+      .select(col("id").as("vec_id"), (col("d1") + col("d2")).as("raw"))
   }
 
-  /** Oracle for [[pqKnn]]: BOTH subspace k-means replayed CTE-for-CTE
-    * (the [[kmeansAssignSql]] recipe under `s1`/`s2` prefixes over
-    * sliced vectors), ADC per subspace with the identical dot-expansion
-    * association, codes joined to the lookup table, one add, same total
-    * order. */
-  def pqKnnSql(k: Int = 10, queryVecId: Long = 0L): String = {
-    val h = PqSubDim
-    val d = 2 * PqSubDim
-    def adcCte(name: String, q: String, cents: String): String =
-      s"""$name AS (SELECT c.cid,
+  /** DuckDB twin of [[adcScan]] + the top-k emit: BOTH subspace k-means
+    * replayed CTE-for-CTE (the [[kmeansAssignSql]] recipe under `s1`/`s2`
+    * prefixes over sliced vectors), ADC per subspace with the identical
+    * dot-expansion association, codes joined to the lookup table, one
+    * add, (adc asc, id asc). `candCtes` defines a `cand(id)` CTE over
+    * `e` that restricts the scan.
+    */
+  private def adcTopKSql(k: Int, queryVecId: Long, candCtes: Option[String]): String = {
+    val (h, d) = (PqSubDim, 2 * PqSubDim)
+    val adcCtes = Seq(1 -> s"1:$h", 2 -> s"${h + 1}:$d").map { case (sub, dims) =>
+      s"""q$sub AS (SELECT v[$dims] AS qv FROM e WHERE vec_id = $queryVecId),
+         |adc$sub AS (SELECT c.cid,
          |  list_dot_product(q.qv,q.qv) - 2*list_dot_product(q.qv,c.cv) + list_dot_product(c.cv,c.cv) AS d
-         |  FROM $cents c CROSS JOIN $q q)""".stripMargin
-    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-       |s1pts AS (SELECT vec_id AS id, v[1:$h] AS v FROM e),
-       |s2pts AS (SELECT vec_id AS id, v[${h + 1}:$d] AS v FROM e),
-       |${kmeansCtesSql(PqK, PqIters, "s1")},
-       |${kmeansCtesSql(PqK, PqIters, "s2")},
-       |q1 AS (SELECT v[1:$h] AS qv FROM e WHERE vec_id = $queryVecId),
-       |q2 AS (SELECT v[${h + 1}:$d] AS qv FROM e WHERE vec_id = $queryVecId),
-       |${adcCte("adc1", "q1", s"s1c$PqIters")},
-       |${adcCte("adc2", "q2", s"s2c$PqIters")},
+         |  FROM s${sub}c$PqIters c CROSS JOIN q$sub q)""".stripMargin
+    }
+    s"""WITH $pqFitCtesSql,
+       |${candCtes.fold("")(_ + ",")}
+       |${adcCtes.mkString(",\n")},
        |scored AS (
        |  SELECT a1.id, (x1.d + x2.d) AS adc
        |  FROM s1afin a1 JOIN s2afin a2 USING (id)
        |  JOIN adc1 x1 ON a1.cid = x1.cid
-       |  JOIN adc2 x2 ON a2.cid = x2.cid)
+       |  JOIN adc2 x2 ON a2.cid = x2.cid
+       |  ${candCtes.fold("")(_ => "JOIN cand c ON c.id = a1.id")})
        |SELECT id AS vec_id, round(adc, 6) + 0.0 AS adc_dist
        |FROM scored ORDER BY adc, id LIMIT $k""".stripMargin
   }
+
+  /** The PQ oracles' shared fit: `e(vec_id, v)`, the sliced subspace
+    * points and both subspace k-means replays (`s1afin`/`s2afin` codes,
+    * `s1c$PqIters`/`s2c$PqIters` codebooks).
+    */
+  private def pqFitCtesSql: String = {
+    val (h, d) = (PqSubDim, 2 * PqSubDim)
+    s"""e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+       |s1pts AS (SELECT vec_id AS id, v[1:$h] AS v FROM e),
+       |s2pts AS (SELECT vec_id AS id, v[${h + 1}:$d] AS v FROM e),
+       |${kmeansCtesSql(PqK, PqIters, "s1")},
+       |${kmeansCtesSql(PqK, PqIters, "s2")}""".stripMargin
+  }
+
+  /** PQ ADC top-k: [[adcScan]] over every coded vector, ranked (adc asc,
+    * id asc) on raw doubles, rounded at 6 dp with −0.0 normalized.
+    * Returns DataFrame(vec_id, adc_dist).
+    */
+  def pqKnn(spark: SparkSession, dir: String, k: Int = 10,
+      queryVecId: Long = 0L): DataFrame =
+    emitTopK(adcScan(spark, dir, queryVecId, None), k, "adc_dist", ascending = true)
+
+  def pqKnnSql(k: Int = 10, queryVecId: Long = 0L): String =
+    adcTopKSql(k, queryVecId, None)
 
   /** Per-(subspace, code) occupancy of the persisted PQ codes — the
     * quantizer-health report next to [[ivfStats]]: a code that captured
     * most of a subspace means the codebook collapsed (ADC distances
     * stop discriminating), the PQ analog of the reference's per-level
-    * stats (/root/reference/include/usearch/index.hpp:3133-3210). One
-    * groupBy per subspace over the code-partitioned assignments, empty
-    * codes kept via the codebook tables; share in exact integer basis
-    * points. The corpus count is the one driver scalar.
+    * stats (index.hpp:3133-3210). One groupBy per subspace over the
+    * code-partitioned assignments, empty codes kept via the codebook
+    * tables; share in exact integer basis points. The corpus count is
+    * the one driver scalar.
     */
   def pqStats(spark: SparkSession, dir: String): DataFrame = {
     val (fit1, fit2, e) = pqFits(spark, dir)
@@ -1125,8 +1076,6 @@ object Similarity {
     * (the pqKnn recipe), then the same occupancy arithmetic per side.
     */
   def pqStatsSql(): String = {
-    val h = PqSubDim
-    val d = 2 * PqSubDim
     def sideSql(sub: Int): String =
       s"""SELECT $sub AS subspace, c.cid AS code,
          |  CAST(COALESCE(n.n_vecs, 0) AS BIGINT) AS n_vecs,
@@ -1134,11 +1083,7 @@ object Similarity {
          |FROM s${sub}c$PqIters c
          |LEFT JOIN (SELECT cid, count(*) AS n_vecs FROM s${sub}afin GROUP BY cid) n
          |  ON n.cid = c.cid CROSS JOIN tot""".stripMargin
-    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-       |s1pts AS (SELECT vec_id AS id, v[1:$h] AS v FROM e),
-       |s2pts AS (SELECT vec_id AS id, v[${h + 1}:$d] AS v FROM e),
-       |${kmeansCtesSql(PqK, PqIters, "s1")},
-       |${kmeansCtesSql(PqK, PqIters, "s2")},
+    s"""WITH $pqFitCtesSql,
        |tot AS (SELECT count(*) AS t FROM e)
        |${sideSql(1)}
        |UNION ALL
@@ -1149,31 +1094,33 @@ object Similarity {
   /** PQ recall gate vs the exact full-vector l2sq top-k (the per-dtype
     * recall-table discipline extended to the PQ family). */
   def pqRecall(spark: SparkSession, dir: String): DataFrame =
-    graft.eval.Eval.recallBp(spark,
-      pqKnn(spark, dir), MetricQueries.knnL2sq(spark, dir), "vec_id", 10)
+    recall(spark, dir, pqKnn(spark, dir), ExactRank.L2sq)
 
-  /** PQ coarse-to-exact REFINE (the [[knnB1Refine]] pattern on the PQ
-    * family): ADC shortlist of factor·k candidates re-ranked by exact
-    * full-vector l2sq — the table-lookup scan prunes, the exact pass
-    * pays full-dim arithmetic on factor·k rows only.
+  def pqRecallSql(): String = recallSql(pqKnnSql(), ExactRank.L2sq)
+
+  /** Coarse-to-exact REFINE over a shortlist: the shortlist's vec_ids
+    * re-ranked by exact full-vector l2sq against the query — the cheap
+    * stage prunes, the exact pass pays full-dim arithmetic on the
+    * shortlist only (a broadcast-join of its rows against the vectors),
+    * so refine cost is independent of corpus size. (raw l2sq asc, id asc)
+    * with the `round(x, 6) + 0.0` emission.
     */
-  def pqKnnRefine(spark: SparkSession, dir: String, k: Int = 10,
-      factor: Int = 8, queryVecId: Long = 0L): DataFrame = {
-    val short = pqKnn(spark, dir, k * factor, queryVecId).select(col("vec_id"))
+  private def refineL2sq(spark: SparkSession, dir: String, shortlist: DataFrame,
+      k: Int, queryVecId: Long): DataFrame = {
     val e = emb(spark, dir)
     val q = broadcast(e.where(col("vec_id") === queryVecId)
       .select(col("embedding").as("qe")))
-    e.join(short, Seq("vec_id")).crossJoin(q)
+    emitTopK(e.join(shortlist.select(col("vec_id")), Seq("vec_id")).crossJoin(q)
       .select(col("vec_id"),
-        graft.functions.Distances.l2sqDistance(col("embedding"), col("qe")).as("raw"))
-      .orderBy(asc("raw"), asc("vec_id"))
-      .limit(k)
-      .select(col("vec_id"), (round(col("raw"), 6) + lit(0.0)).as("l2sq_dist"))
+        graft.functions.Distances.l2sqDistance(col("embedding"), col("qe")).as("raw")),
+      k, "l2sq_dist", ascending = true)
   }
 
-  def pqKnnRefineSql(k: Int = 10, factor: Int = 8, queryVecId: Long = 0L): String = {
+  /** DuckDB twin of [[refineL2sq]]; `shortlist` is the shortlist's own
+    * oracle SQL. */
+  private def refineL2sqSql(shortlist: String, k: Int, queryVecId: Long): String = {
     val raw = "list_dot_product(ee.v, ee.v) - 2.0 * list_dot_product(ee.v, q.qe) + list_dot_product(q.qe, q.qe)"
-    s"""WITH short AS (SELECT vec_id FROM (${pqKnnSql(k * factor, queryVecId)}) s),
+    s"""WITH short AS (SELECT vec_id FROM ($shortlist) s),
        |ee AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
        |q AS (SELECT v AS qe FROM ee WHERE vec_id = $queryVecId)
        |SELECT ee.vec_id, round($raw, 6) + 0.0 AS l2sq_dist
@@ -1181,33 +1128,21 @@ object Similarity {
        |ORDER BY $raw, ee.vec_id LIMIT $k""".stripMargin
   }
 
+  /** PQ + exact refine (the [[knnB1Refine]] pattern on the PQ family):
+    * the ADC top-(factor·k) re-ranked by [[refineL2sq]].
+    */
+  def pqKnnRefine(spark: SparkSession, dir: String, k: Int = 10,
+      factor: Int = 8, queryVecId: Long = 0L): DataFrame =
+    refineL2sq(spark, dir, pqKnn(spark, dir, k * factor, queryVecId), k, queryVecId)
+
+  def pqKnnRefineSql(k: Int = 10, factor: Int = 8, queryVecId: Long = 0L): String =
+    refineL2sqSql(pqKnnSql(k * factor, queryVecId), k, queryVecId)
+
   /** Refined-PQ recall gate — the b1 0.30 → 1.00 story retold for PQ. */
   def pqRecallRefine(spark: SparkSession, dir: String): DataFrame =
-    graft.eval.Eval.recallBp(spark,
-      pqKnnRefine(spark, dir), MetricQueries.knnL2sq(spark, dir), "vec_id", 10)
+    recall(spark, dir, pqKnnRefine(spark, dir), ExactRank.L2sq)
 
-  def pqRecallRefineSql(): String = {
-    val rawEx = "list_dot_product(e.v, e.v) - 2.0 * list_dot_product(e.v, qx.v) + list_dot_product(qx.v, qx.v)"
-    s"""WITH pq AS (SELECT vec_id FROM (${pqKnnRefineSql()}) p),
-       |ee AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-       |qx AS (SELECT v FROM ee WHERE vec_id = 0),
-       |ex AS (SELECT e.vec_id FROM ee e, qx ORDER BY $rawEx, e.vec_id LIMIT 10)
-       |SELECT 10 AS k, CAST(count(*) * 1000 AS BIGINT) AS recall_bp
-       |FROM pq JOIN ex USING (vec_id)""".stripMargin
-  }
-
-  def pqRecallSql(): String = {
-    // the exact side reuses knnL2sqSql's proven raw form (2.0 literal —
-    // Distances.l2sqDistance's twin; 2 and 2.0 multiply identically, the
-    // consistency is with the pinned twin, not the value)
-    val rawEx = "list_dot_product(e.v, e.v) - 2.0 * list_dot_product(e.v, qx.v) + list_dot_product(qx.v, qx.v)"
-    s"""WITH pq AS (SELECT vec_id FROM (${pqKnnSql()}) p),
-       |ee AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-       |qx AS (SELECT v FROM ee WHERE vec_id = 0),
-       |ex AS (SELECT e.vec_id FROM ee e, qx ORDER BY $rawEx, e.vec_id LIMIT 10)
-       |SELECT 10 AS k, CAST(count(*) * 1000 AS BIGINT) AS recall_bp
-       |FROM pq JOIN ex USING (vec_id)""".stripMargin
-  }
+  def pqRecallRefineSql(): String = recallSql(pqKnnRefineSql(), ExactRank.L2sq)
 
   // ------------------------------------------------- IVF-PQ composite
 
@@ -1216,206 +1151,132 @@ object Similarity {
 
   /** IVF-PQ: the two scale mechanisms composed — the COARSE quantizer
     * (persisted IVF cells, [[ivfIndexFor]]) prunes the corpus to nprobe
-    * cells, and PRODUCT QUANTIZATION ([[pqKnn]]'s codebooks) scores the
-    * surviving candidates by table lookup instead of full-dim
-    * arithmetic. This is the classical billion-scale ANN serving layout
-    * (IVFADC, Jégou et al. 2011) and this engine's analog of the
-    * reference's compressed-graph serving mode: at 100 TB a query
-    * touches nprobe/nlist of the cells and pays two broadcast-join
-    * lookups per candidate — never a full-vector scan.
+    * cells, and PRODUCT QUANTIZATION ([[adcScan]]) scores the surviving
+    * candidates by table lookup instead of full-dim arithmetic. This is
+    * the classical billion-scale ANN serving layout (IVFADC, Jégou et
+    * al. 2011) and this engine's analog of the reference's
+    * compressed-graph serving mode: at 100 TB a query touches
+    * nprobe/nlist of the cells and pays two broadcast-join lookups per
+    * candidate — never a full-vector scan.
     *
-    * Determinism: cell probing is [[ivfKnn]]'s rule (cos distance asc,
-    * cid asc — nlist rows on the driver); codes and ADC tables are the
-    * pinned k-means + dot-expansion association of [[pqKnn]]; final rank
-    * (adc asc, id asc) on raw doubles. At nprobe = nlist every cell is
-    * probed, so IVF-PQ must equal plain PQ exactly (ThirdWaveSpec).
+    * Determinism: cell probing is [[ivfKnn]]'s rule ([[probeCells]]);
+    * codes and ADC tables are [[pqKnn]]'s; final rank (adc asc, id asc)
+    * on raw doubles. At nprobe = nlist every cell is probed, so IVF-PQ
+    * must equal plain PQ exactly (ThirdWaveSpec).
     */
   def ivfPqKnn(spark: SparkSession, dir: String, k: Int = 10,
       nlist: Int = IvfPqNlist, nprobe: Int = IvfPqNprobe,
       queryVecId: Long = 0L): DataFrame = {
-    val ivf = ivfIndexFor(spark, dir, nlist)
-    val qVec = emb(spark, dir).where(col("vec_id") === queryVecId)
-      .select(col("embedding").cast("array<double>")).head().getSeq[Double](0).toArray
-    val probed = ivf.centroids.collect()
-      .map { r =>
-        val c = r.getSeq[Double](1).toArray
-        val d = 1.0 - graft.functions.DotProduct.dot(qVec, c) /
-          (math.sqrt(graft.functions.DotProduct.dot(qVec, qVec)) *
-            math.sqrt(graft.functions.DotProduct.dot(c, c)))
-        (r.getLong(0), d)
-      }
-      .sortBy { case (cid, d) => (d, cid) }
-      .take(nprobe)
-      .map(_._1)
-
-    val (fit1, fit2, e) = pqFits(spark, dir)
-    val q = e.where(col("id") === queryVecId)
-    def adcFor(cents: DataFrame, from: Int): DataFrame =
-      cents.crossJoin(broadcast(q.select(slice(col("v"), from, PqSubDim).as("qv"))))
-        .select(col("cid"),
-          dot(col("qv"), col("qv"))
-            .minus(lit(2.0) * dot(col("qv"), col("cvec")))
-            .plus(dot(col("cvec"), col("cvec"))).as("dsub"))
-    val adc1 = adcFor(fit1.centroids, 1)
-      .withColumnRenamed("cid", "c1").withColumnRenamed("dsub", "d1")
-    val adc2 = adcFor(fit2.centroids, PqSubDim + 1)
-      .withColumnRenamed("cid", "c2").withColumnRenamed("dsub", "d2")
-    ivf.assignments
-      .where(col("cid").isin(probed.toSeq: _*))
-      .select(col("id"))
-      .join(fit1.assignments.select(col("id"), col("cid").as("c1")), Seq("id"))
-      .join(fit2.assignments.select(col("id"), col("cid").as("c2")), Seq("id"))
-      .join(broadcast(adc1), Seq("c1"))
-      .join(broadcast(adc2), Seq("c2"))
-      .select(col("id"), (col("d1") + col("d2")).as("adc"))
-      .orderBy(asc("adc"), asc("id"))
-      .limit(k)
-      .select(col("id").as("vec_id"),
-        (round(col("adc"), 6) + lit(0.0)).as("adc_dist"))
+    val probed = probeCells(spark, dir, ivfIndexFor(spark, dir, nlist), queryVecId, nprobe)
+    emitTopK(adcScan(spark, dir, queryVecId, Some(probed)), k, "adc_dist", ascending = true)
   }
 
   /** Oracle for [[ivfPqKnn]]: the coarse IVF k-means replayed
     * CTE-for-CTE (the [[ivfRecallCurveSql]] recipe), cell probing by the
-    * same (cos dist asc, cid asc) rank, BOTH subspace codebooks and the
-    * ADC tables from [[pqKnnSql]]'s recipe, candidates filtered to the
-    * probed cells, one add, same total order. */
+    * same (cos dist asc, cid asc) rank, then [[adcTopKSql]] over the
+    * probed cells' ids. */
   def ivfPqKnnSql(k: Int = 10, nlist: Int = IvfPqNlist,
-      nprobe: Int = IvfPqNprobe, queryVecId: Long = 0L): String = {
-    val h = PqSubDim
-    val d = 2 * PqSubDim
-    def adcCte(name: String, q: String, cents: String): String =
-      s"""$name AS (SELECT c.cid,
-         |  list_dot_product(q.qv,q.qv) - 2*list_dot_product(q.qv,c.cv) + list_dot_product(c.cv,c.cv) AS d
-         |  FROM $cents c CROSS JOIN $q q)""".stripMargin
-    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-       |pts AS (SELECT vec_id AS id, v FROM e),
-       |${kmeansCtesSql(nlist, IvfKmeansIters)},
-       |qf AS (SELECT v AS qv FROM e WHERE vec_id = $queryVecId),
-       |cellrank AS (
-       |  SELECT cid,
-       |    row_number() OVER (ORDER BY 1.0 - ${cosineSql("qv", "cv")}, cid) AS cell_rank
-       |  FROM qf CROSS JOIN c$IvfKmeansIters),
-       |s1pts AS (SELECT vec_id AS id, v[1:$h] AS v FROM e),
-       |s2pts AS (SELECT vec_id AS id, v[${h + 1}:$d] AS v FROM e),
-       |${kmeansCtesSql(PqK, PqIters, "s1")},
-       |${kmeansCtesSql(PqK, PqIters, "s2")},
-       |q1 AS (SELECT v[1:$h] AS qv FROM e WHERE vec_id = $queryVecId),
-       |q2 AS (SELECT v[${h + 1}:$d] AS qv FROM e WHERE vec_id = $queryVecId),
-       |${adcCte("adc1", "q1", s"s1c$PqIters")},
-       |${adcCte("adc2", "q2", s"s2c$PqIters")},
-       |cand AS (
-       |  SELECT a.id FROM afin a JOIN cellrank cr ON a.cid = cr.cid
-       |  WHERE cr.cell_rank <= $nprobe),
-       |scored AS (
-       |  SELECT c.id, (x1.d + x2.d) AS adc
-       |  FROM cand c
-       |  JOIN s1afin a1 ON a1.id = c.id
-       |  JOIN s2afin a2 ON a2.id = c.id
-       |  JOIN adc1 x1 ON a1.cid = x1.cid
-       |  JOIN adc2 x2 ON a2.cid = x2.cid)
-       |SELECT id AS vec_id, round(adc, 6) + 0.0 AS adc_dist
-       |FROM scored ORDER BY adc, id LIMIT $k""".stripMargin
-  }
+      nprobe: Int = IvfPqNprobe, queryVecId: Long = 0L): String =
+    adcTopKSql(k, queryVecId, Some(
+      s"""pts AS (SELECT vec_id AS id, v FROM e),
+         |${kmeansCtesSql(nlist, IvfKmeansIters)},
+         |qf AS (SELECT v AS qv FROM e WHERE vec_id = $queryVecId),
+         |cellrank AS (
+         |  SELECT cid,
+         |    row_number() OVER (ORDER BY 1.0 - ${cosineSql("qv", "cv")}, cid) AS cell_rank
+         |  FROM qf CROSS JOIN c$IvfKmeansIters),
+         |cand AS (
+         |  SELECT a.id FROM afin a JOIN cellrank cr ON a.cid = cr.cid
+         |  WHERE cr.cell_rank <= $nprobe)""".stripMargin))
 
   /** IVF-PQ recall gate vs the exact full-vector l2sq top-k — recall at
     * nprobe/nlist = ¼ compounds the coarse prune's misses with the ADC
     * error, the honest compressed-serving number the refine pattern
     * ([[pqKnnRefine]]) then recovers. */
   def ivfPqRecall(spark: SparkSession, dir: String): DataFrame =
-    graft.eval.Eval.recallBp(spark,
-      ivfPqKnn(spark, dir), MetricQueries.knnL2sq(spark, dir), "vec_id", 10)
+    recall(spark, dir, ivfPqKnn(spark, dir), ExactRank.L2sq)
 
-  def ivfPqRecallSql(): String = {
-    val rawEx = "list_dot_product(e.v, e.v) - 2.0 * list_dot_product(e.v, qx.v) + list_dot_product(qx.v, qx.v)"
-    s"""WITH pq AS (SELECT vec_id FROM (${ivfPqKnnSql()}) p),
-       |ee AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-       |qx AS (SELECT v FROM ee WHERE vec_id = 0),
-       |ex AS (SELECT e.vec_id FROM ee e, qx ORDER BY $rawEx, e.vec_id LIMIT 10)
-       |SELECT 10 AS k, CAST(count(*) * 1000 AS BIGINT) AS recall_bp
-       |FROM pq JOIN ex USING (vec_id)""".stripMargin
-  }
+  def ivfPqRecallSql(): String = recallSql(ivfPqKnnSql(), ExactRank.L2sq)
 
   /** IVF-PQ + EXACT REFINE — the full billion-scale serving stack
-    * (coarse cell prune → ADC table-lookup shortlist → exact re-rank of
-    * `k·factor` survivors by full-dim l2sq). This is the IVFADC+R layout
-    * (Jégou et al. 2011 §V): at 100 TB the exact arithmetic touches only
-    * the shortlist (a broadcast-join of k·factor rows against the
-    * vectors), so refine cost is independent of corpus size. Recall can
-    * only rise vs [[ivfPqKnn]]: every true neighbor the ADC top-k found
-    * is in the wider shortlist, and exact distances rank true neighbors
-    * above any other candidate (ThirdWaveSpec pins monotonicity and
-    * full-probe ≡ [[pqKnnRefine]]).
-    *
-    * Determinism: shortlist is [[ivfPqKnn]]'s pinned order; the re-rank
-    * is the identical (raw l2sq asc, id asc) total order as
-    * [[pqKnnRefine]] with the same `round(x, 6) + 0.0` emission.
+    * (coarse cell prune → ADC table-lookup shortlist → [[refineL2sq]] of
+    * `k·factor` survivors), the IVFADC+R layout (Jégou et al. 2011 §V).
+    * Recall can only rise vs [[ivfPqKnn]]: every true neighbor the ADC
+    * top-k found is in the wider shortlist, and exact distances rank
+    * true neighbors above any other candidate (ThirdWaveSpec pins
+    * monotonicity and full-probe ≡ [[pqKnnRefine]]).
     */
   def ivfPqKnnRefine(spark: SparkSession, dir: String, k: Int = 10,
-      factor: Int = 8, nprobe: Int = IvfPqNprobe): DataFrame = {
-    val short = ivfPqKnn(spark, dir, k * factor, nprobe = nprobe).select(col("vec_id"))
-    val e = emb(spark, dir)
-    val q = broadcast(e.where(col("vec_id") === 0L)
-      .select(col("embedding").as("qe")))
-    e.join(short, Seq("vec_id")).crossJoin(q)
-      .select(col("vec_id"),
-        graft.functions.Distances.l2sqDistance(col("embedding"), col("qe")).as("raw"))
-      .orderBy(asc("raw"), asc("vec_id"))
-      .limit(k)
-      .select(col("vec_id"), (round(col("raw"), 6) + lit(0.0)).as("l2sq_dist"))
-  }
+      factor: Int = 8, nprobe: Int = IvfPqNprobe, queryVecId: Long = 0L): DataFrame =
+    refineL2sq(spark, dir,
+      ivfPqKnn(spark, dir, k * factor, nprobe = nprobe, queryVecId = queryVecId), k, queryVecId)
 
-  /** Oracle for [[ivfPqKnnRefine]]: [[ivfPqKnnSql]] at k·factor as the
-    * shortlist, then [[pqKnnRefineSql]]'s exact re-rank verbatim. */
-  def ivfPqKnnRefineSql(k: Int = 10, factor: Int = 8): String = {
-    val raw = "list_dot_product(ee.v, ee.v) - 2.0 * list_dot_product(ee.v, q.qe) + list_dot_product(q.qe, q.qe)"
-    s"""WITH short AS (SELECT vec_id FROM (${ivfPqKnnSql(k * factor)}) s),
-       |ee AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-       |q AS (SELECT v AS qe FROM ee WHERE vec_id = 0)
-       |SELECT ee.vec_id, round($raw, 6) + 0.0 AS l2sq_dist
-       |FROM ee JOIN short USING (vec_id) CROSS JOIN q
-       |ORDER BY $raw, ee.vec_id LIMIT $k""".stripMargin
-  }
+  def ivfPqKnnRefineSql(k: Int = 10, factor: Int = 8, nprobe: Int = IvfPqNprobe,
+      queryVecId: Long = 0L): String =
+    refineL2sqSql(ivfPqKnnSql(k * factor, nprobe = nprobe, queryVecId = queryVecId),
+      k, queryVecId)
 
   /** Refined IVF-PQ recall gate — what the exact re-rank recovers of the
     * compound coarse-prune + ADC error at the same nprobe. */
   def ivfPqRefineRecall(spark: SparkSession, dir: String): DataFrame =
-    graft.eval.Eval.recallBp(spark,
-      ivfPqKnnRefine(spark, dir), MetricQueries.knnL2sq(spark, dir), "vec_id", 10)
+    recall(spark, dir, ivfPqKnnRefine(spark, dir), ExactRank.L2sq)
 
-  def ivfPqRefineRecallSql(): String = {
-    val rawEx = "list_dot_product(e.v, e.v) - 2.0 * list_dot_product(e.v, qx.v) + list_dot_product(qx.v, qx.v)"
-    s"""WITH pq AS (SELECT vec_id FROM (${ivfPqKnnRefineSql()}) p),
-       |ee AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-       |qx AS (SELECT v FROM ee WHERE vec_id = 0),
-       |ex AS (SELECT e.vec_id FROM ee e, qx ORDER BY $rawEx, e.vec_id LIMIT 10)
-       |SELECT 10 AS k, CAST(count(*) * 1000 AS BIGINT) AS recall_bp
-       |FROM pq JOIN ex USING (vec_id)""".stripMargin
-  }
+  def ivfPqRefineRecallSql(): String = recallSql(ivfPqKnnRefineSql(), ExactRank.L2sq)
+
+  /** Even vec_ids as the left side, odd as the right, both as (id, vec). */
+  private def joinSides(spark: SparkSession, dir: String, side: Int): DataFrame =
+    emb(spark, dir).where(col("vec_id") % 2 === side)
+      .select(col("vec_id").as("id"), col("embedding").as("vec"))
 
   /** Engine semantic join (stable-marriage analog). Batch-synchronous
     * Gale–Shapley is also SQL-expressible — [[semanticJoinSql]] runs the
     * identical rounds as a DuckDB recursive CTE.
     */
-  def semanticJoin(spark: SparkSession, dir: String): DataFrame = {
-    val e = emb(spark, dir)
-    val leftDf = e.where(col("vec_id") % 2 === 0)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val rightDf = e.where(col("vec_id") % 2 === 1)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    graft.index.SemanticJoin.join(spark, leftDf, rightDf, maxProposals = SemJoinMaxProposals)
+  def semanticJoin(spark: SparkSession, dir: String): DataFrame =
+    graft.index.SemanticJoin.join(spark, joinSides(spark, dir, 0), joinSides(spark, dir, 1),
+        maxProposals = SemJoinMaxProposals)
       .select(col("left_id"), col("right_id"), round(col("dist"), 6).as("dist"))
-  }
 
   final val SemJoinMaxProposals = 8
 
-  /** DuckDB oracle for [[semanticJoin]]: the SAME batch-synchronous
-    * Gale–Shapley rounds as a recursive CTE. State = one row per left
-    * (pointer + engagement); each round, free lefts propose at their
-    * pointer, each right keeps min(dist, left_id) among proposals ∪
-    * engagements (one window), proposers advance. The recursion
-    * references the state once (the single-candidate encoding:
-    * engaged lefts candidate with their engagement, free lefts with
-    * their proposal) and stops when no proposals happen.
+  /** The SAME batch-synchronous Gale–Shapley rounds as the engine, as one
+    * recursive CTE over caller-defined `lft(id, v)` and
+    * `prefs(left_id, right_id, dist, pos)` CTEs, plus the final
+    * engagement select. State = one row per left (pointer + engagement);
+    * each round, free lefts propose at their pointer, each right keeps
+    * min(dist, left_id) among proposals ∪ engagements (one window),
+    * proposers advance. The recursion references the state once (the
+    * single-candidate encoding: engaged lefts candidate with their
+    * engagement, free lefts with their proposal) and stops when no
+    * proposals happen.
+    */
+  private val galeShapleySql: String =
+    s"""gs(iter, left_id, pos, eng_right, eng_dist) AS (
+       |  SELECT 0, id, 1, CAST(NULL AS BIGINT), CAST(NULL AS DOUBLE) FROM lft
+       |  UNION ALL
+       |  SELECT iter + 1, left_id,
+       |         pos + (CASE WHEN prop_right IS NOT NULL THEN 1 ELSE 0 END),
+       |         CASE WHEN cand_right IS NOT NULL AND rnk = 1 THEN cand_right END,
+       |         CASE WHEN cand_right IS NOT NULL AND rnk = 1 THEN cand_dist END
+       |  FROM (
+       |    SELECT st.*,
+       |           coalesce(st.eng_right, st.prop_right) AS cand_right,
+       |           coalesce(st.eng_dist, st.prop_dist) AS cand_dist,
+       |           row_number() OVER (PARTITION BY coalesce(st.eng_right, st.prop_right)
+       |                              ORDER BY coalesce(st.eng_dist, st.prop_dist), st.left_id) AS rnk,
+       |           max(CASE WHEN st.prop_right IS NOT NULL THEN 1 ELSE 0 END) OVER () AS any_prop
+       |    FROM (SELECT s.iter, s.left_id, s.pos, s.eng_right, s.eng_dist,
+       |                 p.right_id AS prop_right, p.dist AS prop_dist
+       |          FROM gs s LEFT JOIN prefs p
+       |            ON s.eng_right IS NULL AND p.left_id = s.left_id AND p.pos = s.pos) st
+       |  ) WHERE any_prop = 1
+       |)
+       |SELECT left_id, eng_right AS right_id, round(eng_dist, 6) AS dist
+       |FROM gs WHERE iter = (SELECT max(iter) FROM gs) AND eng_right IS NOT NULL
+       |ORDER BY left_id""".stripMargin
+
+  /** DuckDB oracle for [[semanticJoin]]: full cross-product preference
+    * lists capped at [[SemJoinMaxProposals]], then [[galeShapleySql]].
     */
   def semanticJoinSql: String =
     s"""WITH RECURSIVE
@@ -1429,45 +1290,12 @@ object Similarity {
        |        FROM lft l CROSS JOIN rgt r)
        |  QUALIFY pos <= $SemJoinMaxProposals
        |),
-       |gs(iter, left_id, pos, eng_right, eng_dist) AS (
-       |  SELECT 0, id, 1, CAST(NULL AS BIGINT), CAST(NULL AS DOUBLE) FROM lft
-       |  UNION ALL
-       |  SELECT iter + 1, left_id,
-       |         pos + (CASE WHEN prop_right IS NOT NULL THEN 1 ELSE 0 END),
-       |         CASE WHEN cand_right IS NOT NULL AND rnk = 1 THEN cand_right END,
-       |         CASE WHEN cand_right IS NOT NULL AND rnk = 1 THEN cand_dist END
-       |  FROM (
-       |    SELECT st.*,
-       |           coalesce(st.eng_right, st.prop_right) AS cand_right,
-       |           coalesce(st.eng_dist, st.prop_dist) AS cand_dist,
-       |           row_number() OVER (PARTITION BY coalesce(st.eng_right, st.prop_right)
-       |                              ORDER BY coalesce(st.eng_dist, st.prop_dist), st.left_id) AS rnk,
-       |           max(CASE WHEN st.prop_right IS NOT NULL THEN 1 ELSE 0 END) OVER () AS any_prop
-       |    FROM (SELECT s.iter, s.left_id, s.pos, s.eng_right, s.eng_dist,
-       |                 p.right_id AS prop_right, p.dist AS prop_dist
-       |          FROM gs s LEFT JOIN prefs p
-       |            ON s.eng_right IS NULL AND p.left_id = s.left_id AND p.pos = s.pos) st
-       |  ) WHERE any_prop = 1
-       |)
-       |SELECT left_id, eng_right AS right_id, round(eng_dist, 6) AS dist
-       |FROM gs WHERE iter = (SELECT max(iter) FROM gs) AND eng_right IS NOT NULL
-       |ORDER BY left_id""".stripMargin
+       |$galeShapleySql""".stripMargin
 
   final val SemJoinAnnNlist = 8
   final val SemJoinAnnNprobe = 2
   final val SemJoinAnnIters = 2
 
-  /** ANN-candidate semantic join — the reference's actual design: stable
-    * marriage over preference lists from approximate-nearest-neighbor
-    * search (/root/reference/include/usearch/index.hpp:4337-4338; each
-    * free man searches the index at :4470-4480). Here the "index" is the
-    * engine's IVF structure (deterministic k-means cells over the right
-    * side); each left scores only its nprobe nearest cells. Every step
-    * is deterministic, so the full pipeline — k-means, cell probing,
-    * capped preference lists, GS rounds — has an exact SQL twin
-    * ([[semanticJoinAnnSql]]): the approximation is in the ALGORITHM
-    * (identical in both engines), never in the execution.
-    */
   /** Persisted right-side cell structure for [[semanticJoinAnn]] — built
     * once per data dir and served from Parquet thereafter (the same
     * index-at-add-time model as [[ivfIndexFor]]; fitting k-means inside
@@ -1476,19 +1304,12 @@ object Similarity {
     */
   def semJoinIvfFor(spark: SparkSession, dir: String,
       nlist: Int = SemJoinAnnNlist, iters: Int = SemJoinAnnIters): IvfIndex = {
-    import java.nio.file.{Files, Paths}
-    val key = dir.replaceAll("[^a-zA-Z0-9.]", "_")
-    val root = s"${sys.props("java.io.tmpdir")}/graft-ivf-$key-semjoin-n$nlist-i$iters"
-    val marker = Paths.get(root, "_committed")
-    if (!Files.exists(marker)) {
-      val rightPts = emb(spark, dir).where(col("vec_id") % 2 === 1)
-        .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val km = graft.index.KMeans.fit(spark, rightPts, k = nlist, iterations = iters,
-        computeInertia = false)
+    val root = persistedRoot(dir, key => s"graft-ivf-$key-semjoin-n$nlist-i$iters") { root =>
+      val km = graft.index.KMeans.fit(spark, joinSides(spark, dir, 1), k = nlist,
+        iterations = iters, computeInertia = false)
       km.centroids.write.mode("overwrite").parquet(s"$root/centroids")
       km.assignments.select(col("cid"), col("id"))
         .write.mode("overwrite").parquet(s"$root/assignments")
-      Files.writeString(marker, "ok")
       km.centroids.unpersist()
       km.assignments.unpersist()
     }
@@ -1497,53 +1318,41 @@ object Similarity {
       spark.read.parquet(s"$root/assignments"))
   }
 
+  /** ANN-candidate semantic join — the reference's actual design: stable
+    * marriage over preference lists from approximate-nearest-neighbor
+    * search (index.hpp:4337-4338; each free man searches the index at
+    * :4470-4480). Here the "index" is the engine's IVF structure
+    * (deterministic k-means cells over the right side); each left scores
+    * only its nprobe nearest cells. Every step is deterministic, so the
+    * full pipeline — k-means, cell probing, capped preference lists, GS
+    * rounds — has an exact SQL twin ([[semanticJoinAnnSql]]): the
+    * approximation is in the ALGORITHM (identical in both engines),
+    * never in the execution.
+    */
   def semanticJoinAnn(spark: SparkSession, dir: String): DataFrame = {
-    val e = emb(spark, dir)
-    val leftDf = e.where(col("vec_id") % 2 === 0)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val rightDf = e.where(col("vec_id") % 2 === 1)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
     val ivf = semJoinIvfFor(spark, dir)
-    graft.index.SemanticJoin.joinIvfWith(spark, leftDf, rightDf,
-        maxProposals = SemJoinMaxProposals, nprobe = SemJoinAnnNprobe,
-        centroids = ivf.centroids, assignments = ivf.assignments)
+    graft.index.SemanticJoin.joinIvfWith(spark, joinSides(spark, dir, 0),
+        joinSides(spark, dir, 1), maxProposals = SemJoinMaxProposals,
+        nprobe = SemJoinAnnNprobe, centroids = ivf.centroids, assignments = ivf.assignments)
       .select(col("left_id"), col("right_id"), round(col("dist"), 6).as("dist"))
   }
 
   /** DuckDB oracle for [[semanticJoinAnn]]: k-means over the right side
-    * (unrolled CTEs, the [[kmeansAssignSql]] recipe), nprobe nearest
-    * cells per left, capped candidate preference lists, then the SAME
-    * recursive-CTE GS rounds as [[semanticJoinSql]].
+    * ([[kmeansCtesSql]] over `pts`), nprobe nearest cells per left (l2sq
+    * asc, cid asc), capped candidate preference lists, then
+    * [[galeShapleySql]].
     */
   def semanticJoinAnnSql: String = {
-    val (nlist, nprobe, iters, maxP) =
-      (SemJoinAnnNlist, SemJoinAnnNprobe, SemJoinAnnIters, SemJoinMaxProposals)
-    def dist(p: String, c: String): String =
-      s"list_dot_product($p,$p) - 2*list_dot_product($p,$c) + list_dot_product($c,$c)"
-    def assignCte(name: String, cents: String, keepVec: Boolean): String =
-      s"""$name AS (SELECT id, cid${if (keepVec) ", v" else ""} FROM (
-         |  SELECT p.id, c.cid, p.v,
-         |    row_number() OVER (PARTITION BY p.id ORDER BY ${dist("p.v", "c.cv")}, c.cid) AS rnk
-         |  FROM rgt p CROSS JOIN $cents c) WHERE rnk = 1)""".stripMargin
-    val iterCtes = (1 to iters).map { i =>
-      s"""${assignCte(s"a$i", s"c${i - 1}", keepVec = true)},
-         |u$i AS (SELECT cid, list(mean ORDER BY dim) AS cv FROM (
-         |  SELECT cid, dim, list_aggregate(list(x ORDER BY x), 'sum') / count(*) AS mean
-         |  FROM (SELECT cid, unnest(v) AS x, unnest(range(len(v))) AS dim FROM a$i)
-         |  GROUP BY cid, dim) GROUP BY cid),
-         |c$i AS (SELECT c.cid, coalesce(u.cv, c.cv) AS cv FROM c${i - 1} c LEFT JOIN u$i u ON u.cid = c.cid)""".stripMargin
-    }.mkString(",\n")
+    val (nlist, nprobe, iters) = (SemJoinAnnNlist, SemJoinAnnNprobe, SemJoinAnnIters)
+    val l2sq = "list_dot_product(l.v,l.v) - 2*list_dot_product(l.v,c.cv) + list_dot_product(c.cv,c.cv)"
     s"""WITH RECURSIVE
        |e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
        |lft AS (SELECT vec_id AS id, v FROM e WHERE vec_id % 2 = 0),
-       |rgt AS (SELECT vec_id AS id, v FROM e WHERE vec_id % 2 = 1),
-       |c0 AS (SELECT CAST(row_number() OVER (ORDER BY id) - 1 AS BIGINT) AS cid, v AS cv
-       |       FROM (SELECT id, v FROM rgt ORDER BY id LIMIT $nlist)),
-       |$iterCtes,
-       |${assignCte("afin", s"c$iters", keepVec = false)},
+       |pts AS (SELECT vec_id AS id, v FROM e WHERE vec_id % 2 = 1),
+       |${kmeansCtesSql(nlist, iters)},
        |probe AS (SELECT left_id, cid FROM (
        |  SELECT l.id AS left_id, c.cid,
-       |    row_number() OVER (PARTITION BY l.id ORDER BY ${dist("l.v", "c.cv")}, c.cid) AS rnk
+       |    row_number() OVER (PARTITION BY l.id ORDER BY $l2sq, c.cid) AS rnk
        |  FROM lft l CROSS JOIN c$iters c) WHERE rnk <= $nprobe),
        |prefs AS (
        |  SELECT left_id, right_id, dist,
@@ -1553,33 +1362,11 @@ object Similarity {
        |            (sqrt(list_dot_product(l.v, l.v)) * sqrt(list_dot_product(r.v, r.v))) AS dist
        |        FROM probe p
        |        JOIN afin a ON a.cid = p.cid
-       |        JOIN rgt r ON r.id = a.id
+       |        JOIN pts r ON r.id = a.id
        |        JOIN lft l ON l.id = p.left_id)
-       |  QUALIFY pos <= $maxP
+       |  QUALIFY pos <= $SemJoinMaxProposals
        |),
-       |gs(iter, left_id, pos, eng_right, eng_dist) AS (
-       |  SELECT 0, id, 1, CAST(NULL AS BIGINT), CAST(NULL AS DOUBLE) FROM lft
-       |  UNION ALL
-       |  SELECT iter + 1, left_id,
-       |         pos + (CASE WHEN prop_right IS NOT NULL THEN 1 ELSE 0 END),
-       |         CASE WHEN cand_right IS NOT NULL AND rnk = 1 THEN cand_right END,
-       |         CASE WHEN cand_right IS NOT NULL AND rnk = 1 THEN cand_dist END
-       |  FROM (
-       |    SELECT st.*,
-       |           coalesce(st.eng_right, st.prop_right) AS cand_right,
-       |           coalesce(st.eng_dist, st.prop_dist) AS cand_dist,
-       |           row_number() OVER (PARTITION BY coalesce(st.eng_right, st.prop_right)
-       |                              ORDER BY coalesce(st.eng_dist, st.prop_dist), st.left_id) AS rnk,
-       |           max(CASE WHEN st.prop_right IS NOT NULL THEN 1 ELSE 0 END) OVER () AS any_prop
-       |    FROM (SELECT s.iter, s.left_id, s.pos, s.eng_right, s.eng_dist,
-       |                 p.right_id AS prop_right, p.dist AS prop_dist
-       |          FROM gs s LEFT JOIN prefs p
-       |            ON s.eng_right IS NULL AND p.left_id = s.left_id AND p.pos = s.pos) st
-       |  ) WHERE any_prop = 1
-       |)
-       |SELECT left_id, eng_right AS right_id, round(eng_dist, 6) AS dist
-       |FROM gs WHERE iter = (SELECT max(iter) FROM gs) AND eng_right IS NOT NULL
-       |ORDER BY left_id""".stripMargin
+       |$galeShapleySql""".stripMargin
   }
 
   /** Near-dup fixture view: `embeddings` ∪ a perturbed copy of every
@@ -1702,12 +1489,9 @@ object Similarity {
     val e = emb(spark, dir)
     val q = broadcast(e.where(col("vec_id") === queryVecId)
       .select(col("embedding").as("q_embedding")))
-    e.where(col("vec_id") =!= queryVecId).crossJoin(q)
-      .select(col("vec_id"), cosine(col("embedding"), col("q_embedding")).as("cos_raw"))
-      .where(col("cos_raw") > lit(threshold))
-      .orderBy(desc("cos_raw"), asc("vec_id"))
-      .limit(cap)
-      .select(col("vec_id"), round(col("cos_raw"), 6).as("cos_sim"))
+    emitTopK(e.where(col("vec_id") =!= queryVecId).crossJoin(q)
+      .select(col("vec_id"), cosine(col("embedding"), col("q_embedding")).as("raw"))
+      .where(col("raw") > lit(threshold)), cap, "cos_sim")
   }
 
   def radiusSearchSql(threshold: Double = RadiusThreshold, cap: Int = RadiusCap,
@@ -1878,12 +1662,10 @@ object Similarity {
     val e = emb(spark, dir)
     val q = broadcast(e.where(col("vec_id") === queryVecId)
       .select(col("embedding").as("qv")))
-    val rows = e.where(col("vec_id") =!= queryVecId).crossJoin(q)
+    val rows = rankTopK(e.where(col("vec_id") =!= queryVecId).crossJoin(q)
       .select(col("vec_id"),
         col("embedding").cast("array<double>").as("v"),
-        cosine(col("embedding"), col("qv")).as("cosq"))
-      .orderBy(desc("cosq"), asc("vec_id"))
-      .limit(shortlist)
+        cosine(col("embedding"), col("qv")).as("raw")), shortlist, ascending = false)
       .collect()
     // driver-side greedy over the shortlist (same fold order as
     // list_dot_product: left-to-right elementwise)

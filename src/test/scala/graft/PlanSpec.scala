@@ -145,6 +145,44 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("vector entries keep their exchange and broadcast-exchange counts") {
+    // every single-query vector top-k goes through one kNN / ADC / refine /
+    // probe kernel in Similarity; this pins each entry's executed-plan
+    // shape (Exchange nodes, BroadcastExchange nodes) at sf0.001 so a
+    // change to a shared kernel cannot add a shuffle or drop a broadcast
+    import graft.ops.Similarity
+    val dir = "/root/testdata/sf0.001"
+    def shape(df: org.apache.spark.sql.DataFrame): (Int, Int) = {
+      val nodes = planOf(df).linesIterator
+        .map(_.dropWhile(c => " +-:*".contains(c)).takeWhile(_ != ' ')).toSeq
+      (nodes.count(_.endsWith("Exchange")), nodes.count(_ == "BroadcastExchange"))
+    }
+    val got = Seq(
+      "knnExact" -> shape(Similarity.knnExact(spark, dir)),
+      "knnExact filtered" -> shape(Similarity.knnExact(spark, dir, labelFilter = Some(3))),
+      "knnI8" -> shape(Similarity.knnI8(spark, dir)),
+      "knnF16" -> shape(Similarity.knnF16(spark, dir)),
+      "knnBf16" -> shape(Similarity.knnBf16(spark, dir)),
+      "knnB1" -> shape(Similarity.knnB1(spark, dir)),
+      "knnB1Refine" -> shape(Similarity.knnB1Refine(spark, dir)),
+      "knnWithMetric" -> shape(Similarity.knnWithMetric(spark, dir, graft.functions.Metric.Cos)),
+      "ivfKnn" -> shape(Similarity.ivfKnn(spark, dir, nlist = 8, nprobe = 8)),
+      "ivfAddKnn" -> shape(Similarity.ivfAddKnn(spark, dir)),
+      "pqKnn" -> shape(Similarity.pqKnn(spark, dir)),
+      "pqKnnRefine" -> shape(Similarity.pqKnnRefine(spark, dir)),
+      "ivfPqKnn" -> shape(Similarity.ivfPqKnn(spark, dir)),
+      "ivfPqKnnRefine" -> shape(Similarity.ivfPqKnnRefine(spark, dir))).toMap
+    // recorded from the per-dtype / per-family copies the kernels replaced
+    val want = Map(
+      "knnExact" -> (1, 1), "knnExact filtered" -> (1, 1), "knnI8" -> (1, 1),
+      "knnF16" -> (1, 1), "knnBf16" -> (1, 1), "knnB1" -> (1, 1),
+      "knnB1Refine" -> (1, 1), "knnWithMetric" -> (1, 1),
+      "ivfKnn" -> (2, 2), "ivfAddKnn" -> (4, 3),
+      "pqKnn" -> (7, 7), "pqKnnRefine" -> (9, 9),
+      "ivfPqKnn" -> (8, 8), "ivfPqKnnRefine" -> (10, 10))
+    assert(got == want, s"(exchanges, broadcast exchanges) = $got")
+  }
+
   test("hot terms are bucket-salted: posting-row size is bounded by bucket width") {
     // a term in EVERY doc ("def" is in every generated doc) must be split
     // into one posting row per docId-bucket — no task ever materializes a

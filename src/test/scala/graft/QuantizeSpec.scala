@@ -15,6 +15,7 @@ class QuantizeSpec extends SparkSpec {
   import spark.implicits._
 
   private val dir = "/root/testdata/sf0.01"
+  private val small = new java.io.File(new java.io.File(dir).getParentFile, "sf0.001").getPath
 
   test("i8 quantization: values in [-127,127], recall@10 >= 0.9 vs f64 exact") {
     val q = spark.read.parquet(s"$dir/embeddings.parquet")
@@ -163,6 +164,40 @@ class QuantizeSpec extends SparkSpec {
         s"bf16($x): got ${got(x)}, ref ${refBf16(x)}")
   }
 
+  test("knnQuantized == driver brute force in every scalar kind, queries 0 and 7") {
+    // the reference rounding per kind is the spec's own: the bit-level
+    // f16/bf16 converters above and a plain-loop i8; scores are
+    // DotProduct.dot cosines ranked (score desc, id asc), rounded at 6 dp
+    import graft.functions.DotProduct.dot
+    val vecs = spark.read.parquet(s"$small/embeddings.parquet")
+      .select("vec_id", "embedding").collect()
+      .map(r => r.getLong(0) -> r.getSeq[Float](1).map(_.toDouble).toArray)
+    def refI8(v: Array[Double]): Array[Double] = {
+      val mag = math.sqrt(dot(v, v))
+      if (mag == 0.0) v.map(_ => 0.0)
+      else v.map(x => math.max(math.min(x * 127.0 / mag, 127.0), -127.0).toLong.toDouble)
+    }
+    import Similarity.Quantizer
+    val kinds: Seq[(String, Quantizer, Array[Double] => Array[Double])] = Seq(
+      ("exact", Quantizer.Exact, v => v), ("i8", Quantizer.I8, refI8),
+      ("f16", Quantizer.F16, _.map(refF16)), ("bf16", Quantizer.Bf16, _.map(refBf16)))
+    def round6(d: Double): Double =
+      BigDecimal(d).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    for ((name, q, ref) <- kinds; qid <- Seq(0L, 7L)) {
+      val qv = vecs.map { case (id, v) => id -> ref(v) }
+      val query = qv.find(_._1 == qid).get._2
+      val want = qv
+        .map { case (id, v) =>
+          id -> dot(v, query) / (math.sqrt(dot(v, v)) * math.sqrt(dot(query, query)))
+        }
+        .sortBy { case (id, c) => (-c, id) }
+        .take(10).map { case (id, c) => (id, round6(c)) }.toSeq
+      val got = Similarity.knnQuantized(spark, small, q, 10, qid).collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      assert(got == want, s"$name kNN of vec $qid")
+    }
+  }
+
   test("bf16 recall@10 vs f64 exact sits between f16 and b1 (8 significand bits)") {
     val exact = Similarity.knnExact(spark, dir, k = 10)
     val bf16 = Similarity.knnBf16(spark, dir, k = 10)
@@ -179,6 +214,26 @@ class QuantizeSpec extends SparkSpec {
     val recall = Eval.recallAt(f16, exact, "vec_id", 10)
     info(s"f16 recall@10 = $recall")
     assert(recall >= 0.9, s"f16 recall@10 too low: $recall")
+  }
+
+  test("recall entries report the pinned recall_bp at sf0.001") {
+    def bp(df: org.apache.spark.sql.DataFrame): Long = df.collect().head.getLong(1)
+    val got = Seq(
+      "i8" -> bp(Similarity.recallI8(spark, small)),
+      "b1" -> bp(Similarity.recallB1(spark, small)),
+      "b1_refine" -> bp(Similarity.recallB1Refine(spark, small)),
+      "f16" -> bp(Similarity.recallF16(spark, small)),
+      "bf16" -> bp(Similarity.recallBf16(spark, small)),
+      "pq" -> bp(Similarity.pqRecall(spark, small)),
+      "pq_refine" -> bp(Similarity.pqRecallRefine(spark, small)),
+      "ivfpq" -> bp(Similarity.ivfPqRecall(spark, small)),
+      "ivfpq_refine" -> bp(Similarity.ivfPqRefineRecall(spark, small))).toMap
+    // recorded from the per-dtype recall entries before they shared one kernel
+    val want = Map[String, Long](
+      "i8" -> 9000, "b1" -> 2000, "b1_refine" -> 10000, "f16" -> 10000,
+      "bf16" -> 10000, "pq" -> 2000, "pq_refine" -> 7000, "ivfpq" -> 2000,
+      "ivfpq_refine" -> 8000)
+    assert(got == want, s"recall_bp = $got")
   }
 
   test("TopKAgg equals the window-rank oracle, both directions") {

@@ -220,6 +220,17 @@ class ThirdWaveSpec extends SparkSpec {
     assert(got == again)
   }
 
+  test("IVF-PQ refine ranks the requested query: full probe == PQ refine for vec 7") {
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Double)] =
+      df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val fullProbe = rows(Similarity.ivfPqKnnRefine(spark, dir,
+      nprobe = Similarity.IvfPqNlist, queryVecId = 7L))
+    assert(fullProbe == rows(Similarity.pqKnnRefine(spark, dir, queryVecId = 7L)),
+      "full-probe IVF-PQ refine != PQ refine for vec 7")
+    // the exact re-rank puts the query itself first, at distance 0
+    assert(fullProbe.head == ((7L, 0.0)), s"vec 7 is not its own nearest: ${fullProbe.head}")
+  }
+
   test("geo radius == brute-force haversine filter, nearest-first") {
     import graft.ops.MetricQueries
     val got = MetricQueries.geoRadius(spark, dir).collect()
